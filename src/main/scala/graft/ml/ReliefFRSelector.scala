@@ -2,9 +2,10 @@ package graft.ml
 
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.{Estimator, Model}
-import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
+import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.rdd.RDD
@@ -117,10 +118,16 @@ trait ReliefFRParams extends Params {
   *    The reference keys kNN on (partitionIndex, localIndex) and uses
   *    per-partition RNG for sampling (ReliefFRSelector.scala:339-369,
   *    223-242), so its results shift with the layout.
-  *  - Each query batch is collected and broadcast; every partition
-  *    scans its rows once, maintaining a bounded [[TopK]] per query;
+  *  - Each query batch is collected and broadcast as a [[KnnBatch]];
+  *    every partition scans its rows once through that shared exact
+  *    kNN kernel, maintaining a bounded [[TopK]] per (query, class);
   *    heaps merge with `reduceByKey` (map-side combine — shuffle is
-  *    O(#queries × k), never O(rows)).
+  *    O(#queries × k), never O(rows)). Dense rows are scored against a
+  *    feature-major copy of the batch, one vectorized pass over all
+  *    queries per row, with the exact operation order of
+  *    `Vectors.sqdist`, so neighbors and weights are bit-identical to a
+  *    per-pair loop; sparse rows, and batches holding a sparse query,
+  *    keep `Vectors.sqdist`.
   *  - The weight pass inverts the neighbor map (rowId → queries it
   *    serves) and `treeAggregate`s flat primitive arrays: per-feature
   *    per-(class,hit/miss) relevance sums, collision marginals, and a
@@ -145,9 +152,14 @@ trait ReliefFRParams extends Params {
   *
   * Scale notes (100 TB): the data is scanned 2×#batches times and
   * never shuffled (only fixed-size digests move); broadcast per batch
-  * is batchRows × vectorSize; the joint matrix is
+  * is batchRows × vectorSize, and each executor builds one more copy of
+  * a dense batch, feature-major (≤ maxQueryRowsPerBatch × vectorSize
+  * doubles); the joint matrix is
   * O(lowerFeat × nFeat) doubles per task — for very high-dimensional
   * sparse data, raise batch count and lower lowerFeatureThreshold.
+  * Every job the fit runs carries the description
+  * "graft relief: <phase>" (setup, then sample/knn/weights b/B per
+  * batch).
   */
 final class ReliefFRSelector(override val uid: String)
     extends Estimator[ReliefFRSelectorModel] with ReliefFRParams with MLWritable {
@@ -203,13 +215,13 @@ final class ReliefFRSelector(override val uid: String)
           .rdd.map { case Row(id: Long, v: Vector, l: Double) => (id, v, l) }
       }).persist(StorageLevel.MEMORY_AND_DISK)
 
-    val nElems = data.count()
-    require(nElems > 0, "empty dataset")
-    val nFeat = data.first()._2.size
-
-    // Class priors (one tiny job; the map is broadcast implicitly with closures)
-    val priors: Map[Double, Double] =
-      data.map(_._3).countByValue().map { case (l, c) => l -> c.toDouble / nElems }.toMap
+    val (nElems, nFeat, priors) = ReliefFRSelector.phase(sc, "setup") {
+      val n = data.count()
+      require(n > 0, "empty dataset")
+      // class priors (one tiny job; the map is broadcast implicitly with closures)
+      (n, data.first()._2.size,
+        data.map(_._3).countByValue().map { case (l, c) => l -> c.toDouble / n }.toMap)
+    }
     val classes: Array[Double] = priors.keys.toArray.sorted
     val labelIdx: Map[Double, Int] = classes.zipWithIndex.toMap
     val nClasses = classes.length
@@ -245,9 +257,12 @@ final class ReliefFRSelector(override val uid: String)
     var topFeatures: Array[Int] = Array.empty
 
     for (b <- 0 until nBatches) {
-      val queries: Array[(Long, Vector, Double)] = batches(b).collect()
+      val of = s"${b + 1}/$nBatches"
+      val queries: Array[(Long, Vector, Double)] =
+        ReliefFRSelector.phase(sc, s"sample $of")(batches(b).collect())
       if (queries.nonEmpty) {
-        val bQueries = sc.broadcast(queries)
+        val bQueries = sc.broadcast(new KnnBatch(queries.map(_._1), queries.map(_._2)))
+        val qLabels = queries.map(_._3)
 
         // ---- pass 1: distributed kNN for this batch ----
         // True RELIEF-F neighborhoods: numNeighbors nearest *per class*
@@ -258,25 +273,17 @@ final class ReliefFRSelector(override val uid: String)
         // groups entirely; per-class heaps implement the documented
         // semantics.
         val kPerClass = $(numNeighbors)
-        val neighborSets: Array[(Int, Array[TopK])] = data.mapPartitions { it =>
-          val qs = bQueries.value
-          val heaps = Array.fill(qs.length, nClasses)(new TopK(kPerClass))
-          it.foreach { case (id, v, l) =>
-            val c = labelIdx(l)
-            var j = 0
-            while (j < qs.length) {
-              if (qs(j)._1 != id) { // self is not a neighbor
-                heaps(j)(c).add(math.sqrt(Vectors.sqdist(qs(j)._2, v)), id)
-              }
-              j += 1
-            }
-          }
-          Iterator.tabulate(qs.length)(j => (j, heaps(j)))
-        }.reduceByKey { (a, b) =>
-          var c = 0
-          while (c < a.length) { a(c).merge(b(c)); c += 1 }
-          a
-        }.collect()
+        val neighborSets: Array[(Int, Array[TopK])] = ReliefFRSelector.phase(sc, s"knn $of") {
+          data.mapPartitions { it =>
+            val knn = bQueries.value.scanner(nClasses, kPerClass)
+            it.foreach { case (id, v, l) => knn.add(id, v, labelIdx(l)) }
+            Iterator.tabulate(bQueries.value.size)(j => (j, knn.heapsOf(j)))
+          }.reduceByKey { (a, b) =>
+            var c = 0
+            while (c < a.length) { a(c).merge(b(c)); c += 1 }
+            a
+          }.collect()
+        }
 
         // invert: rowId -> query indices it serves (buffer-backed build:
         // `prev :+ qIdx` would be O(k²) per hot row)
@@ -301,21 +308,23 @@ final class ReliefFRSelector(override val uid: String)
         // would serialize the whole estimator into every task
         val lSeed = $(seed); val lCont = !$(discreteData)
         val lDistTh = $(lowerDistanceThreshold)
-        val acc = data.treeAggregate(
-          new ReliefAcc(nFeat, nClasses, dense))(
-          seqOp = (a, row) => {
-            a.init(bTopF.value)
-            val qIdxs = bNbrOf.value.get(row._1)
-            if (qIdxs != null) {
-              val qs = bQueries.value
-              qIdxs.foreach { qi =>
-                a.addPair(qs(qi)._1, qs(qi)._2, qs(qi)._3, row._1, row._2, row._3,
-                  labelIdx, lSeed, lCont, lDistTh)
+        val acc = ReliefFRSelector.phase(sc, s"weights $of") {
+          data.treeAggregate(
+            new ReliefAcc(nFeat, nClasses, dense))(
+            seqOp = (a, row) => {
+              a.init(bTopF.value)
+              val qIdxs = bNbrOf.value.get(row._1)
+              if (qIdxs != null) {
+                val qs = bQueries.value
+                qIdxs.foreach { qi =>
+                  a.addPair(qs.ids(qi), qs.vectors(qi), qLabels(qi), row._1, row._2, row._3,
+                    labelIdx, lSeed, lCont, lDistTh)
+                }
               }
-            }
-            a
-          },
-          combOp = (a1, a2) => a1.mergeWith(a2))
+              a
+            },
+            combOp = (a1, a2) => a1.mergeWith(a2))
+        }
 
         // fold batch results into the running totals
         acc.foreachBatchRelevance(priors, classes) { (f, w) =>
@@ -455,6 +464,19 @@ object ReliefFRSelector extends MLReadable[ReliefFRSelector] {
     * nFeat × 2·nClasses doubles per task).
     */
   val DenseFeatureLimit: Int = 1 << 20
+
+  /** The local property behind `SparkContext.setJobDescription`. */
+  private val JobDescription = "spark.job.description"
+
+  /** Runs `body` with the Spark job description "graft relief: <name>",
+    * so the fit's jobs name their phase in the UI and event log; the
+    * caller's description is restored afterwards, also on exception.
+    */
+  private def phase[T](sc: SparkContext, name: String)(body: => T): T = {
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(s"graft relief: $name")
+    try body finally sc.setLocalProperty(JobDescription, prev)
+  }
 
   /** splitmix64 finalizer — stateless 64-bit mixer. */
   private[ml] def mix64(x0: Long): Long = {

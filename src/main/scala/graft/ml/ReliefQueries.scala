@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -163,24 +163,21 @@ object ReliefQueries {
   /** relief_knn: the distributed kNN pass exposed directly — queries are
     * vec_id < 5, k = 10, euclidean. Oracle-checked against DuckDB.
     */
-  def reliefKnn(spark: SparkSession, dir: String): DataFrame = {
-    val df = assembled(spark, dir)
+  def reliefKnn(spark: SparkSession, dir: String): DataFrame =
+    reliefKnnOn(assembled(spark, dir))
+
+  /** [[reliefKnn]] over any (vec_id, features) frame. */
+  private[ml] def reliefKnnOn(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
     val data = df.select("vec_id", "features").rdd
       .map { case Row(id: Long, v: Vector) => (id, v) }
     val queries: Array[(Long, Vector)] = data.filter(_._1 < 5).collect().sortBy(_._1)
-    val bQ = spark.sparkContext.broadcast(queries)
+    val bQ = spark.sparkContext.broadcast(new KnnBatch(queries.map(_._1), queries.map(_._2)))
     val k = 10
     val topk = data.mapPartitions { it =>
-      val qs = bQ.value
-      val heaps = Array.fill(qs.length)(new TopK(k))
-      it.foreach { case (id, v) =>
-        var j = 0
-        while (j < qs.length) {
-          if (qs(j)._1 != id) heaps(j).add(math.sqrt(Vectors.sqdist(qs(j)._2, v)), id)
-          j += 1
-        }
-      }
-      Iterator.tabulate(qs.length)(j => (j, heaps(j)))
+      val knn = bQ.value.scanner(1, k)
+      it.foreach { case (id, v) => knn.add(id, v, 0) }
+      Iterator.tabulate(bQ.value.size)(j => (j, knn.heaps(0)(j)))
     }.reduceByKey(_.merge(_)).collect()
     import spark.implicits._
     topk.flatMap { case (qIdx, heap) =>

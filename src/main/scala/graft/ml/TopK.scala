@@ -16,6 +16,9 @@ final class TopK(val k: Int) extends Serializable {
 
   def size: Int = n
 
+  /** The k-th smallest distance kept; +∞ until the heap is full. */
+  def worst: Double = if (n == 0 || n < k) Double.PositiveInfinity else dists(0)
+
   @inline private def gt(d1: Double, i1: Long, d2: Double, i2: Long): Boolean =
     d1 > d2 || (d1 == d2 && i1 > i2)
 

@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -470,5 +471,118 @@ class ReliefSpec extends SparkSpec {
         .sortBy(identity).take(10).map(_._2).toSeq
     }.toMap
     assert(got == expected)
+  }
+
+  /** The per-pair loop the shared kNN kernel replaced, as a reference. */
+  private def sqdistHeaps(qs: Seq[(Long, Vector)], rows: Seq[(Long, Vector, Int)],
+      nGroups: Int, k: Int): Array[Array[TopK]] = {
+    val heaps = Array.fill(nGroups, qs.length)(new TopK(k))
+    rows.foreach { case (id, v, g) =>
+      qs.indices.foreach { j =>
+        if (qs(j)._1 != id) heaps(g)(j).add(math.sqrt(Vectors.sqdist(qs(j)._2, v)), id)
+      }
+    }
+    heaps
+  }
+
+  test("feature-major kNN kernel keeps the sqdist loop's heaps bit for bit") {
+    val rnd = new scala.util.Random(29)
+    val k = 5; val nGroups = 2
+    def bits(h: TopK): Seq[(Long, Long)] =
+      h.sorted.toSeq.map { case (d, id) => (java.lang.Double.doubleToRawLongBits(d), id) }
+    def check(what: String, qs: Seq[(Long, Vector)], rows: Seq[(Long, Vector, Int)],
+        featureMajor: Boolean): Unit = {
+      val batch = new KnnBatch(qs.map(_._1).toArray, qs.map(_._2).toArray)
+      assert(batch.featureMajor == featureMajor, what)
+      val knn = batch.scanner(nGroups, k)
+      rows.foreach { case (id, v, g) => knn.add(id, v, g) }
+      val want = sqdistHeaps(qs, rows, nGroups, k)
+      for (g <- 0 until nGroups; j <- qs.indices)
+        assert(bits(knn.heaps(g)(j)) == bits(want(g)(j)), s"$what: group $g, query $j")
+    }
+    for (nq <- Seq(1, 3, 17, 500); d <- Seq(1, 7, 100); levels <- Seq(0, 3)) {
+      // levels 0: Gaussian values; 3: values in {0, 1, 2}, so distances tie often
+      def value(): Double = if (levels == 0) rnd.nextGaussian() else rnd.nextInt(levels).toDouble
+      val base = Seq.tabulate(520)(i => (1000L + i, Vectors.dense(Array.fill(d)(value()))))
+      // exact duplicates under smaller ids, shuffled in: tied distances
+      // must resolve by id whatever the scan order
+      val dups = base.take(60).map { case (id, v) => (id - 1000L, v.copy) }
+      val rows = rnd.shuffle(base ++ dups).map { case (id, v) => (id, v, (id % nGroups).toInt) }
+      // queries are data rows, so self-exclusion applies to each of them
+      val qs = rows.take(nq).map { case (id, v, _) => (id, v) }
+      val what = s"nq=$nq d=$d levels=$levels"
+      check(what, qs, rows, featureMajor = true)
+      if (nq == 17) {
+        val sparseRows = rows.zipWithIndex.map { case ((id, v, g), i) =>
+          if (i % 3 == 0) (id, Vectors.dense(v.toArray.map(x => if (x > 0.5) x else 0.0)).toSparse, g)
+          else (id, v, g)
+        }
+        check(s"$what, sparse rows", qs, sparseRows, featureMajor = true)
+        check(s"$what, a sparse query",
+          qs.updated(5, (qs(5)._1, qs(5)._2.toSparse)), rows, featureMajor = false)
+      }
+    }
+  }
+
+  /** 40 rows of width 3 with one dense row (vec_id 17) of width 4. */
+  private def widthMismatched(): DataFrame = {
+    import spark.implicits._
+    (0 until 40).map { i =>
+      (i.toLong, (i % 2).toDouble, Vectors.dense(Array.fill(if (i == 17) 4 else 3)(i * 0.5)))
+    }.toDF("vec_id", "label", "features")
+  }
+
+  private def widthMismatchFit(): ReliefFRSelectorModel = new ReliefFRSelector()
+    .setInputCol("features").setLabelCol("label").setOutputCol("out")
+    .setInstanceIdCol("vec_id").setNumTopFeatures(2).setNumNeighbors(3)
+    .setEstimationRatio(0.5).setBatchSize(1.0).setSeed(8L)
+    .fit(widthMismatched())
+
+  test("a dense row of another width fails the fit and relief_knn loudly") {
+    def assertWidthError(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("dimensions do not match")), s"not a width error: $e")
+    }
+    assertWidthError(widthMismatchFit())
+    assertWidthError(ReliefQueries.reliefKnnOn(widthMismatched()).collect())
+  }
+
+  test("fit jobs are described by phase and batch; the caller's description is restored") {
+    val sc = spark.sparkContext
+    val group = "relief-spec-phases"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        if (ev.properties != null && ev.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(String.valueOf(ev.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "caller")
+      fit(syntheticDense()) // 2 batches
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      intercept[Exception](widthMismatchFit())
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      // listener events arrive in job order: once the marker job is
+      // seen, every fit job before it is too
+      sc.setJobDescription("marker")
+      sc.parallelize(1 to 2, 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      val descs = seen.toArray(Array.empty[String]).toSeq.takeWhile(_ != "marker")
+      val phases = descs.foldLeft(Seq.empty[String]) { (acc, d) =>
+        if (acc.lastOption.contains(d)) acc else acc :+ d
+      }
+      val fitPhases = Seq("setup", "sample 1/2", "knn 1/2", "weights 1/2",
+        "sample 2/2", "knn 2/2", "weights 2/2").map("graft relief: " + _)
+      // the failing fit stops in its first kNN job (one batch)
+      val failedPhases = Seq("setup", "sample 1/1", "knn 1/1").map("graft relief: " + _)
+      assert(phases == fitPhases ++ failedPhases, s"job descriptions: $descs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }
