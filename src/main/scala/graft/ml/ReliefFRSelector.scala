@@ -158,8 +158,9 @@ trait ReliefFRParams extends Params {
   * O(lowerFeat × nFeat) doubles per task — for very high-dimensional
   * sparse data, raise batch count and lower lowerFeatureThreshold.
   * Every job the fit runs carries the description
-  * "graft relief: <phase>" (setup, then sample/knn/weights b/B per
-  * batch).
+  * "graft relief: <phase>": one setup job (row count, label counts and
+  * vector width in one pass), then one sample, one kNN and one weights
+  * job per batch, "sample b/B" etc.
   */
 final class ReliefFRSelector(override val uid: String)
     extends Estimator[ReliefFRSelectorModel] with ReliefFRParams with MLWritable {
@@ -216,11 +217,22 @@ final class ReliefFRSelector(override val uid: String)
       }).persist(StorageLevel.MEMORY_AND_DISK)
 
     val (nElems, nFeat, priors) = ReliefFRSelector.phase(sc, "setup") {
-      val n = data.count()
+      // one job: per partition, the row count of each label and the
+      // width of the first row
+      val parts = data.mapPartitions { it =>
+        val counts = scala.collection.mutable.HashMap.empty[Double, Long]
+        var width = -1
+        it.foreach { case (_, v, l) =>
+          if (width < 0) width = v.size
+          counts(l) = counts.getOrElse(l, 0L) + 1L
+        }
+        Iterator.single((width, counts.toMap))
+      }.collect()
+      val counts = parts.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ + _)
+      val n = counts.values.sum
       require(n > 0, "empty dataset")
-      // class priors (one tiny job; the map is broadcast implicitly with closures)
-      (n, data.first()._2.size,
-        data.map(_._3).countByValue().map { case (l, c) => l -> c.toDouble / n }.toMap)
+      // the first row of the first non-empty partition, as `first()` picks it
+      (n, parts.find(_._1 >= 0).get._1, counts.map { case (l, c) => l -> c.toDouble / n })
     }
     val classes: Array[Double] = priors.keys.toArray.sorted
     val labelIdx: Map[Double, Int] = classes.zipWithIndex.toMap

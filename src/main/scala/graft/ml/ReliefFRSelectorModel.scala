@@ -1,12 +1,19 @@
 package graft.ml
 
+import java.nio.charset.StandardCharsets
+
+import scala.reflect.ClassTag
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.ml.Model
 import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
-import org.apache.spark.ml.param.{ParamMap, Params}
+import org.apache.spark.ml.param.{Param, ParamMap, Params}
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StructField, StructType}
+import org.json4s.{JArray, JLong, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** Model fitted by [[ReliefFRSelector]]: the two rankings (plain
   * RELIEF-F and relevance−redundancy) plus the normalized per-feature
@@ -139,89 +146,155 @@ object ReliefFRSelectorModel extends MLReadable[ReliefFRSelectorModel] {
   }
 
   // persisted sparsely too: the weight payload is bounded by active
-  // dims, so a kddb-scale model round-trips in KBs, not hundreds of MB
-  private case class ModelData(
-      stdSelection: Seq[Int], redundancySelection: Seq[Int],
-      numFeatures: Int, defaultWeight: Double,
-      weightedFeatures: Seq[Int], weightedValues: Seq[Double])
-
+  // dims (the 20k×30M-feature spec's model saves as a 26 KB file)
   private[ml] class Writer(instance: ReliefFRSelectorModel) extends MLWriter {
     override protected def saveImpl(path: String): Unit = {
-      GraftPersist.saveMetadata(instance, path, sparkSession)
-      val data = ModelData(instance.stdSelection.toSeq,
-        instance.redundancySelection.toSeq, instance.numFeatures,
-        instance.defaultWeight, instance.weightedFeatures.toSeq,
-        instance.weightedValues.toSeq)
-      sparkSession.createDataFrame(Seq(data)).repartition(1)
-        .write.mode("overwrite").parquet(GraftPersist.dataPath(path))
+      import org.json4s.JsonDSL._
+      import GraftPersist.bits
+      GraftPersist.save(instance, path, sparkSession,
+        ("stdSelection" -> instance.stdSelection.toSeq) ~
+          ("redundancySelection" -> instance.redundancySelection.toSeq) ~
+          ("numFeatures" -> instance.numFeatures) ~
+          ("defaultWeight" -> bits(instance.defaultWeight)) ~
+          ("weightedFeatures" -> instance.weightedFeatures.toSeq) ~
+          ("weightedValues" -> instance.weightedValues.toSeq.map(bits)))
     }
   }
 
   private class Reader extends MLReader[ReliefFRSelectorModel] {
     override def load(path: String): ReliefFRSelectorModel = {
-      val row = sparkSession.read.parquet(GraftPersist.dataPath(path))
-        .select("stdSelection", "redundancySelection", "numFeatures",
-          "defaultWeight", "weightedFeatures", "weightedValues").head()
-      val model = new ReliefFRSelectorModel(
-        GraftPersist.loadUid(path, sparkSession),
-        row.getAs[Seq[Int]](0).toArray,
-        row.getAs[Seq[Int]](1).toArray,
-        row.getInt(2), row.getDouble(3),
-        row.getAs[Seq[Int]](4).toArray,
-        row.getAs[Seq[Double]](5).toArray)
-      GraftPersist.applyParams(model, path, sparkSession)
-      model
+      val saved = GraftPersist.load(path, sparkSession, classOf[ReliefFRSelectorModel])
+      saved.restore(new ReliefFRSelectorModel(saved.uid,
+        saved.ints("stdSelection"), saved.ints("redundancySelection"),
+        saved.int("numFeatures"), saved.double("defaultWeight"),
+        saved.ints("weightedFeatures"), saved.doubles("weightedValues")))
     }
   }
 
   override def read: MLReader[ReliefFRSelectorModel] = new Reader
 }
 
-/** Hand-rolled metadata persistence (uid + explicitly-set params as
-  * param-encoded JSON strings). Spark's DefaultParamsWriter/Reader are
-  * private[ml], so a graft-local equivalent: one parquet row of
-  * (uid, map<paramName, jsonValue>) — works on any Hadoop filesystem,
-  * no driver-local file I/O.
+/** Hand-rolled persistence (Spark's DefaultParamsWriter/Reader are
+  * private[ml]): one JSON file, `<path>/graft_model.json`, holding the
+  * instance's class, uid, explicitly-set params (as
+  * `Param.jsonEncode` strings) and, for models, the payload fields.
+  * Doubles in the payload are stored as their raw IEEE bits, so they
+  * round-trip bit for bit. The driver reads and writes the file
+  * through the Hadoop FileSystem API, so any Hadoop filesystem works
+  * and neither save nor load runs a Spark job.
+  *
+  * Paths saved in the older parquet layout (a one-row
+  * `<path>/graft_metadata` frame of uid and params, plus a one-row
+  * `<path>/data` frame for models) still load, read-only.
   */
 private[ml] object GraftPersist {
-  def dataPath(path: String): String = s"$path/data"
-  private def metaPath(path: String): String = s"$path/graft_metadata"
+  private val FileName = "graft_model.json"
+  private val LegacyMetadata = "graft_metadata"
+  private val LegacyData = "data"
 
-  def saveMetadata(instance: Params with Identifiable, path: String,
-      spark: SparkSession): Unit = {
-    val params: Map[String, String] = instance.params.flatMap { p =>
-      instance.get(p).map(v => p.name -> p.asInstanceOf[org.apache.spark.ml.param.Param[Any]].jsonEncode(v))
-    }.toMap
-    spark.createDataFrame(Seq((instance.uid, params)))
-      .toDF("uid", "params").repartition(1)
-      .write.mode("overwrite").parquet(metaPath(path))
+  def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  /** One saved instance: its uid, its set params, and its payload. */
+  final class Saved private[GraftPersist] (where: String, val uid: String,
+      params: Map[String, String], data: JValue) {
+
+    def int(field: String): Int = Math.toIntExact(long(data \ field, field))
+    def double(field: String): Double = java.lang.Double.longBitsToDouble(long(data \ field, field))
+    def ints(field: String): Array[Int] = longs(field).map(Math.toIntExact)
+    def doubles(field: String): Array[Double] = longs(field).map(java.lang.Double.longBitsToDouble)
+
+    /** Sets the saved params on `instance` (names it lacks are skipped). */
+    def restore[T <: Params](instance: T): T = {
+      params.foreach { case (name, json) =>
+        if (instance.hasParam(name)) {
+          val p = instance.getParam(name)
+          instance.set(p, p.jsonDecode(json))
+        }
+      }
+      instance
+    }
+
+    private def longs(field: String): Array[Long] = data \ field match {
+      case JArray(vs) => vs.iterator.map(long(_, field)).toArray
+      case v => corrupt(v, field)
+    }
+    private def long(v: JValue, field: String): Long = v match {
+      case JLong(x) => x
+      case _ => corrupt(v, field)
+    }
+    private def corrupt(v: JValue, field: String): Nothing =
+      throw new java.io.IOException(s"$where: field $field holds ${compact(render(v))}")
   }
 
-  def loadUid(path: String, spark: SparkSession): String =
-    spark.read.parquet(metaPath(path)).select("uid").head().getString(0)
+  def save(instance: Params with Identifiable, path: String, spark: SparkSession,
+      data: JObject = JObject()): Unit = {
+    val params = instance.params.toList.flatMap { p =>
+      instance.get(p).map(v => p.name -> JString(p.asInstanceOf[Param[Any]].jsonEncode(v)))
+    }
+    val json = JObject("class" -> JString(instance.getClass.getName),
+      "uid" -> JString(instance.uid), "params" -> JObject(params), "data" -> data)
+    val file = new Path(path, FileName)
+    val out = file.getFileSystem(hadoopConf(spark)).create(file)
+    try out.write(compact(render(json)).getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
 
-  def applyParams(instance: Params, path: String, spark: SparkSession): Unit = {
-    val params = spark.read.parquet(metaPath(path))
-      .select("params").head().getAs[Map[String, String]](0)
-    params.foreach { case (name, json) =>
-      if (instance.hasParam(name)) {
-        val p = instance.getParam(name)
-        instance.set(p, p.jsonDecode(json))
-      }
+  /** Reads what [[save]] wrote at `path`, requiring an instance of
+    * `cls`; falls back to the older parquet layout.
+    */
+  def load(path: String, spark: SparkSession, cls: Class[_]): Saved = {
+    val file = new Path(path, FileName)
+    val fs = file.getFileSystem(hadoopConf(spark))
+    if (fs.exists(file)) {
+      val in = fs.open(file)
+      val json = try parse(in: java.io.InputStream, useBigIntForLong = false) finally in.close()
+      val JString(saved) = json \ "class"
+      require(saved == cls.getName, s"$file holds a $saved, not a ${cls.getName}")
+      val JString(uid) = json \ "uid"
+      val JObject(params) = json \ "params"
+      new Saved(file.toString, uid, params.map {
+        case (k, JString(v)) => k -> v
+        case (k, v) => throw new java.io.IOException(s"$file: param $k holds ${compact(render(v))}")
+      }.toMap, json \ "data")
+    } else if (fs.exists(new Path(path, LegacyMetadata))) {
+      loadLegacy(path, spark, fs)
+    } else {
+      throw new java.io.FileNotFoundException(
+        s"no saved graft instance at $path: neither $FileName nor $LegacyMetadata/ is there")
     }
   }
+
+  /** The older layout: one metadata parquet read, plus one data parquet
+    * read for models; the payload is re-expressed in the file's encoding.
+    */
+  private def loadLegacy(path: String, spark: SparkSession, fs: FileSystem): Saved = {
+    val meta = spark.read.parquet(new Path(path, LegacyMetadata).toString)
+      .select("uid", "params").head()
+    def json(v: Any): JValue = v match {
+      case d: Double => JLong(bits(d))
+      case i: Int => JLong(i)
+      case s: scala.collection.Seq[_] => JArray(s.iterator.map(json).toList)
+    }
+    val dataPath = new Path(path, LegacyData)
+    val data = if (!fs.exists(dataPath)) JObject() else {
+      val row = spark.read.parquet(dataPath.toString).head()
+      JObject(row.schema.fieldNames.toList.zipWithIndex.map { case (f, i) => f -> json(row.get(i)) })
+    }
+    new Saved(path, meta.getString(0), meta.getMap[String, String](1).toMap, data)
+  }
+
+  private def hadoopConf(spark: SparkSession) = spark.sessionState.newHadoopConf()
 }
 
 /** Writer/Reader for params-only instances (the estimator). */
 private[ml] class GraftParamsWriter(instance: Params with Identifiable) extends MLWriter {
   override protected def saveImpl(path: String): Unit =
-    GraftPersist.saveMetadata(instance, path, sparkSession)
+    GraftPersist.save(instance, path, sparkSession)
 }
 
-private[ml] class GraftParamsReader[T <: Params](ctor: String => T) extends MLReader[T] {
+private[ml] class GraftParamsReader[T <: Params](ctor: String => T)(implicit tag: ClassTag[T])
+    extends MLReader[T] {
   override def load(path: String): T = {
-    val inst = ctor(GraftPersist.loadUid(path, sparkSession))
-    GraftPersist.applyParams(inst, path, sparkSession)
-    inst
+    val saved = GraftPersist.load(path, sparkSession, tag.runtimeClass)
+    saved.restore(ctor(saved.uid))
   }
 }

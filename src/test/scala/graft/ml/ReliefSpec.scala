@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -549,9 +550,10 @@ class ReliefSpec extends SparkSpec {
     assertWidthError(ReliefQueries.reliefKnnOn(widthMismatched()).collect())
   }
 
-  test("fit jobs are described by phase and batch; the caller's description is restored") {
+  /** Descriptions of the Spark jobs `body` runs on this thread, in job order. */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
-    val group = "relief-spec-phases"
+    val group = "relief-spec-jobs"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(ev: SparkListenerJobStart): Unit =
@@ -561,28 +563,108 @@ class ReliefSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "caller")
-      fit(syntheticDense()) // 2 batches
-      assert(sc.getLocalProperty("spark.job.description") == "caller")
-      intercept[Exception](widthMismatchFit())
-      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      body
       // listener events arrive in job order: once the marker job is
-      // seen, every fit job before it is too
+      // seen, every job before it is too
       sc.setJobDescription("marker")
       sc.parallelize(1 to 2, 1).count()
       val deadline = System.nanoTime() + 30000000000L
       while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      val descs = seen.toArray(Array.empty[String]).toSeq.takeWhile(_ != "marker")
-      val phases = descs.foldLeft(Seq.empty[String]) { (acc, d) =>
-        if (acc.lastOption.contains(d)) acc else acc :+ d
-      }
-      val fitPhases = Seq("setup", "sample 1/2", "knn 1/2", "weights 1/2",
-        "sample 2/2", "knn 2/2", "weights 2/2").map("graft relief: " + _)
-      // the failing fit stops in its first kNN job (one batch)
-      val failedPhases = Seq("setup", "sample 1/1", "knn 1/1").map("graft relief: " + _)
-      assert(phases == fitPhases ++ failedPhases, s"job descriptions: $descs")
+      seen.toArray(Array.empty[String]).toSeq.takeWhile(_ != "marker")
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("fit jobs are described by phase and batch; the caller's description is restored") {
+    val sc = spark.sparkContext
+    val descs = jobDescriptions {
+      fit(syntheticDense()) // 2 batches
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      intercept[Exception](widthMismatchFit())
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    }
+    val phases = descs.foldLeft(Seq.empty[String]) { (acc, d) =>
+      if (acc.lastOption.contains(d)) acc else acc :+ d
+    }
+    val fitPhases = Seq("setup", "sample 1/2", "knn 1/2", "weights 1/2",
+      "sample 2/2", "knn 2/2", "weights 2/2").map("graft relief: " + _)
+    // the failing fit stops in its first kNN job (one batch)
+    val failedPhases = Seq("setup", "sample 1/1", "knn 1/1").map("graft relief: " + _)
+    assert(phases == fitPhases ++ failedPhases, s"job descriptions: $descs")
+    // each fit's setup phase is one job
+    assert(descs.count(_ == "graft relief: setup") == 2, s"job descriptions: $descs")
+  }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  /** What perfbench's persistence gate compares, plus the raw weight bits. */
+  private def modelFields(m: ReliefFRSelectorModel): Seq[Any] =
+    Seq(m.uid, m.stdSelection.toSeq, m.redundancySelection.toSeq, m.numFeatures,
+      bits(m.defaultWeight), m.weightedFeatures.toSeq, m.weightedValues.toSeq.map(bits),
+      m.getOrDefault(m.inputCol), m.getOrDefault(m.outputCol), m.getOrDefault(m.labelCol),
+      m.getOrDefault(m.redundancyRemoval))
+
+  test("save and load of a model and an estimator run no Spark job and keep every weight's bits") {
+    val m = fit(syntheticDense(), red = true)
+    // doubles a decimal rendering could lose: -0.0, a NaN payload,
+    // a subnormal, an infinity, and a value with a 17-digit shortest form
+    val odd = new ReliefFRSelectorModel("reliefFR_odd", Array(2, 0), Array(0, 2), 5,
+      -0.0, Array(0, 1, 2, 3, 4), Array(java.lang.Double.longBitsToDouble(0x7ff8dead0000beefL),
+        Double.MinPositiveValue, Double.NegativeInfinity, 0.1 + 0.2, Double.MaxValue))
+      .setOutputCol("o")
+    val est = new ReliefFRSelector().setNumTopFeatures(7).setEstimationRatio(0.3).setSeed(-5L)
+    val dir = java.nio.file.Files.createTempDirectory("graft_relief_persist").toString
+    var loaded = Seq.empty[ReliefFRSelectorModel]
+    var estLoaded: ReliefFRSelector = null
+    val jobs = jobDescriptions {
+      for (_ <- 1 to 2) { // the second save overwrites the first
+        m.write.overwrite().save(s"$dir/model")
+        odd.write.overwrite().save(s"$dir/odd")
+        est.write.overwrite().save(s"$dir/est")
+      }
+      loaded = Seq(ReliefFRSelectorModel.load(s"$dir/model"), ReliefFRSelectorModel.load(s"$dir/odd"))
+      estLoaded = ReliefFRSelector.load(s"$dir/est")
+    }
+    assert(jobs.isEmpty, s"save/load ran Spark jobs: $jobs")
+    // defaultWeight and every weightedValues entry compare as raw bits
+    assert(loaded.map(modelFields) == Seq(m, odd).map(modelFields))
+    assert(estLoaded.uid == est.uid)
+    assert(estLoaded.extractParamMap().toSeq.map(p => p.param.name -> p.value).toMap ==
+      est.extractParamMap().toSeq.map(p => p.param.name -> p.value).toMap)
+    // an estimator's save is not a model
+    val e = intercept[IllegalArgumentException](ReliefFRSelectorModel.load(s"$dir/est"))
+    assert(e.getMessage.contains("ReliefFRSelector,"), e.getMessage)
+    FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("a model and an estimator saved in the older parquet layout still load, bit for bit") {
+    def fixture(name: String): String =
+      new java.io.File(getClass.getResource(s"/graft/ml/legacy_parquet/$name").toURI).getPath
+    // saved before the single-file layout, from 120 seeded 3-class rows
+    // of 6 features; the expected values were printed when it was saved
+    val m = ReliefFRSelectorModel.load(fixture("model"))
+    assert(modelFields(m) == Seq("reliefFR_legacyfixture", Seq(0, 1, 3), Seq(0, 1, 3), 6,
+      0x3f69f424412404d3L, Seq(0, 1, 2, 3, 4, 5),
+      Seq(0x3ff0000000000000L, 0x3fed32ba19e25eaaL, 0x3f918e0f9d5c1039L,
+        0x3fad21b8595d95a7L, 0x0000000000000000L, 0x3f8a638c72e9b467L),
+      "features", "picked", "label", true))
+    assert(m.getOrDefault(m.numNeighbors) == 4 && m.getOrDefault(m.seed) == 42L)
+    val e = ReliefFRSelector.load(fixture("estimator"))
+    assert(e.uid == "reliefFR_legacyestimator")
+    assert(e.getOrDefault(e.numTopFeatures) == 7 && e.getOrDefault(e.estimationRatio) == 0.3 &&
+      e.getOrDefault(e.seed) == -5L && e.getOrDefault(e.inputCol) == "vec" &&
+      e.getOrDefault(e.discreteData))
+    // re-saved, it is in the new layout and still bit-identical
+    val dir = java.nio.file.Files.createTempDirectory("graft_relief_legacy").toString
+    m.write.overwrite().save(dir)
+    assert(new java.io.File(dir, "graft_model.json").isFile)
+    assert(modelFields(ReliefFRSelectorModel.load(dir)) == modelFields(m))
+    // a path with neither layout fails, naming the path
+    val empty = java.nio.file.Files.createTempDirectory("graft_relief_empty").toString
+    val err = intercept[java.io.FileNotFoundException](ReliefFRSelector.load(empty))
+    assert(err.getMessage.contains(empty), err.getMessage)
+    Seq(dir, empty).foreach(d => FileUtils.deleteDirectory(new java.io.File(d)))
   }
 }
