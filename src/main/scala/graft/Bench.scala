@@ -1,25 +1,213 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.TimeUnit
+
+import scala.collection.mutable
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The measurement main: times every `SparkEntry.queries` operator
+  * (or the `SPARK_GRAFT_QUERIES` prefixes) over `SPARK_GRAFT_BENCH_RUNS`
+  * interleaved passes at `SPARK_GRAFT_SF_DIR`, and records for each
+  * query the scheduler counters of its fastest run (jobs, stages,
+  * tasks, task-seconds, shuffle and spill bytes, and the split between
+  * building the frame and executing it) plus how many runs failed.
+  */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One repetition: `build_s` is the `fn(spark, dir)` call (eager
+    * work: checkpoints, driver counts, `buildOnce`), `exec_s` the noop
+    * write; the counters cover every job the scheduler ran in between.
+    */
+  private[graft] final case class Run(
+      buildS: Double, execS: Double, jobs: Long, stages: Long, tasks: Long,
+      taskS: Double, shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long) {
+    def sec: Double = buildS + execS
+  }
+
+  /** A query's repetitions: the fastest successful one, the number
+    * that failed, and the last failure's message.
+    */
+  private[graft] final case class Outcome(best: Option[Run], errRuns: Int, error: Option[String])
+
+  /** Counts every job, stage and task the scheduler reports.
+    * [[settle]] runs a one-task marker job and returns the counts since
+    * the previous settle, read on the listener thread when the marker
+    * job starts: the bus delivers events in the order they were posted,
+    * so every event of the work before the marker is in, and the
+    * marker's own stage and task are left out.
+    */
+  private final class Counters(sc: SparkContext) extends SparkListener {
+    private val MarkerKey = "graft.bench.marker"
+    private var jobs, stages, tasks, taskMs, shuffleRead, shuffleWrite, spill = 0L
+    private var markerStages = Set.empty[Int]
+    @volatile private var pending = Promise[Run]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (e.properties != null && e.properties.getProperty(MarkerKey) != null) {
+        markerStages = e.stageIds.toSet
+        pending.success(Run(0.0, 0.0, jobs, stages, tasks, taskMs / 1e3,
+          shuffleRead, shuffleWrite, spill))
+        jobs = 0L; stages = 0L; tasks = 0L; taskMs = 0L
+        shuffleRead = 0L; shuffleWrite = 0L; spill = 0L
+      } else jobs += 1
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (!markerStages(e.stageInfo.stageId)) stages += 1
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (!markerStages(e.stageId)) {
+        tasks += 1
+        if (e.taskInfo != null) taskMs += e.taskInfo.duration
+        val m = e.taskMetrics
+        if (m != null) {
+          shuffleRead += m.shuffleReadMetrics.totalBytesRead
+          shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+          spill += m.diskBytesSpilled
+        }
+      }
+
+    def settle(): Run = {
+      val p = Promise[Run]()
+      pending = p
+      sc.setLocalProperty(MarkerKey, "true")
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty(MarkerKey, null)
+      Await.result(p.future, Duration(60, TimeUnit.SECONDS))
+    }
+  }
+
+  /** The timed loop: `nRuns` interleaved passes (pass 1 over every
+    * query, then pass 2, ...), so a transient blip of the machine hits
+    * different queries each pass instead of every run of one query.
+    * The cache is cleared before each run, so every run does the full
+    * work. A run that throws counts in its query's `errRuns`.
+    */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, Query)], nRuns: Int): Seq[(String, Outcome)] = {
+    val sc = spark.sparkContext
+    val counters = new Counters(sc)
+    sc.addSparkListener(counters)
+    val outcomes = mutable.LinkedHashMap.from(queries.map(_._1 -> Outcome(None, 0, None)))
+    try {
+      counters.settle()
+      for (_ <- 1 to nRuns; (name, fn) <- queries) {
+        spark.catalog.clearCache()
+        val t0 = System.nanoTime()
+        var t1 = t0
+        // noop sink: materializes every row/column (count() would let
+        // Catalyst prune the computation away) with zero write cost
+        val failure =
+          try {
+            val df = fn(spark, sfDir)
+            t1 = System.nanoTime()
+            df.write.format("noop").mode("overwrite").save()
+            None
+          } catch { case e: Throwable => Some(message(e)) }
+        val t2 = System.nanoTime()
+        val run = counters.settle().copy(buildS = (t1 - t0) / 1e9, execS = (t2 - t1) / 1e9)
+        val o = outcomes(name)
+        outcomes(name) = failure match {
+          case Some(msg) => o.copy(errRuns = o.errRuns + 1, error = Some(msg))
+          case None if o.best.forall(_.sec > run.sec) => o.copy(best = Some(run))
+          case None => o
+        }
+      }
+    } finally sc.removeSparkListener(counters)
+    outcomes.toSeq
+  }
+
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.isEmpty) 0.0
+    else if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  private[graft] def message(e: Throwable): String = Option(e.getMessage).getOrElse(e.getClass.getName)
+
+  /** JSON string literal: escapes backslash, quote and every control
+    * char (< 0x20), so no message or SQL text can break a reader's
+    * `json.load`.
+    */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  // 3-decimal timings: full-precision doubles ballooned the per-query
+  // line past a ~2000-char end-anchored log-tail capture at 128
+  // queries (BENCH_r05/r06 recorded "parsed": null) — ms resolution
+  // is plenty
+  private def jnum(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  private def jobj(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** The full result line (the `bench_results.json` content), the
+    * chunk lines and the short summary line. A query with at least one
+    * failed run counts in `n_errors` and names its last error; its
+    * `queries` value is the fastest successful run, or "err" when
+    * every run failed.
+    */
+  private[graft] def report(sfDir: String, nRuns: Int, outPath: String,
+      outcomes: Seq[(String, Outcome)], floors: Seq[Double], fsFloors: Seq[Double],
+      probeErrors: Map[String, String]): (String, Seq[String], String) = {
+    val errors = probeErrors.toSeq ++
+      outcomes.collect { case (k, o) if o.errRuns > 0 => k -> o.error.getOrElse("") }
+    val value = outcomes.map { case (k, o) => k -> o.best.fold(jstr("err"))(r => jnum(r.sec)) }
+    val detail = outcomes.map { case (k, o) =>
+      k -> jobj(("err_runs" -> o.errRuns.toString) +: o.best.toSeq.flatMap { r => Seq(
+        "build_s" -> jnum(r.buildS), "exec_s" -> jnum(r.execS), "jobs" -> r.jobs.toString,
+        "stages" -> r.stages.toString, "tasks" -> r.tasks.toString, "task_s" -> jnum(r.taskS),
+        "shuffle_read_bytes" -> r.shuffleReadBytes.toString,
+        "shuffle_write_bytes" -> r.shuffleWriteBytes.toString,
+        "spill_bytes" -> r.spillBytes.toString) })
+    }
+    val total = outcomes.flatMap(_._2.best).map(_.sec).sum
+    val head = s""""metric":"total","value":${jnum(total)},"unit":"sec","n":${outcomes.size},"n_errors":${errors.size},"runs":$nRuns"""
+    def series(xs: Seq[Double]) = xs.sorted.map(jnum).mkString("[", ",", "]")
+    val fullLine = s"""{$head,"floor_sec":${jnum(median(floors))},"floor_series":${series(floors)},"fs_floor_sec":${jnum(median(fsFloors))},"fs_floor_series":${series(fsFloors)},"sf":${jstr(sfDir)},"queries":${jobj(value)},"errors":${jobj(errors.map { case (k, m) => k -> jstr(m.take(80)) })},"detail":${jobj(detail)}}"""
+    // The full line is ~4 KB at 174 queries, past that tail capture,
+    // so the per-query map is printed again as self-contained
+    // ≤40-entry chunk lines, and a SHORT summary line comes last:
+    // whatever suffix of the output survives the capture holds whole,
+    // parseable JSON objects.
+    val chunks = value.grouped(40).toSeq
+    val chunkLines = chunks.zipWithIndex.map { case (grp, i) =>
+      s"""{"metric":"chunk","i":$i,"n_chunks":${chunks.size},"queries":${jobj(grp)}}"""
+    }
+    // the summary caps its error maps so a mass failure cannot push the
+    // line itself past the tail capture (full detail is in the file)
+    val slowest = outcomes.flatMap { case (k, o) => o.best.map(r => k -> r.sec) }
+      .sortBy(-_._2).take(10).map { case (k, s) => k -> jnum(s) }
+    val errRuns = outcomes.collect { case (k, o) if o.errRuns > 0 => k -> o.errRuns.toString }
+    val summary = s"""{$head,"sf":${jstr(sfDir)},"results_file":${jstr(outPath)},"slowest":${jobj(slowest)},"errors":${jobj(errors.take(5).map { case (k, m) => k -> jstr(m.take(60)) })},"err_runs":${jobj(errRuns.take(10))}}"""
+    (fullLine, chunkLines, summary)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // A/B harness hooks: SPARK_GRAFT_CONF="k=v;k=v" sets extra runtime
     // confs (e.g. spark.graft.fusedKernels=false); SPARK_GRAFT_QUERIES
-    // ="d06,d07" restricts the run to a comma-separated subset so a
-    // focused comparison doesn't pay the full 77-query pass per arm.
+    // ="d06,d07" restricts the run to a comma-separated subset of name
+    // prefixes so a focused comparison doesn't pay the full pass per arm.
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
     val onlyQ = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
-    val queries = SparkEntry.queries.filter { case (n, _) =>
+    val queries = SparkEntry.queries.toSeq.filter { case (n, _) =>
       onlyQ.forall(f => f.exists(n.startsWith))
     }
     // Untimed warmup at the smallest SF: pays JIT + codegen compilation
@@ -29,72 +217,37 @@ object Bench {
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
-    // min of N timed runs per query, taken across INTERLEAVED full
-    // passes (pass 1 over every query, then pass 2, ...): local
-    // run-to-run variance (GC, scheduler) is ±30% at these data sizes,
-    // and interleaving means a transient environmental blip hits
-    // different queries each pass instead of every run of one query.
-    // A failing query must be VISIBLE in the output, not recorded as a
-    // flattering ~0 s timing: collect per-query errors and emit them.
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    val times = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
-    // The streaming-harness floor, measured per pass (same min-of-N
-    // discipline): the fixed query-start/stop + micro-batch cost every
-    // s-operator pays regardless of its kernel. Recorded as floor_sec
-    // so bench_diff can compare streaming kernels NET of harness drift
-    // — the cost is ~2.5 s/op × 30 ops of pure fixed cost, which is
-    // exactly where box drift kept tripping the 1.5× gate.
-    // The probe only runs when a streaming-harness query (s-family or
-    // w06) is in the selected set — a focused SPARK_GRAFT_QUERIES run
-    // over batch ops shouldn't pay nRuns × ~2.5 s of probe. A probe
-    // failure is recorded under the reserved "_floor" key (fatal
-    // errors like OOM propagate — swallowing them hid a broken floor
-    // as a silent 0.0 that made bench_diff fall back to raw compares).
-    val needsFloor = queries.keys.exists(n => n.startsWith("s") || n == "w06_sink_streamed")
-    var floors: List[Double] = Nil
+    val probeErrors = mutable.LinkedHashMap[String, String]()
+    // The streaming-harness floor: the fixed query-start/stop +
+    // micro-batch cost every s-operator pays regardless of its kernel,
+    // recorded as floor_sec (the MEDIAN of the probes — a min is one
+    // lucky probe; the floor swung 0.63<->1.26 s across full runs) so
+    // bench_diff can compare streaming kernels NET of harness drift.
+    // Probed only when a streaming query is selected. A probe failing
+    // every run is recorded under the reserved "_floor" key.
+    val needsFloor = queries.exists { case (n, _) => n.startsWith("s") || n == "w06_sink_streamed" }
+    val floors = mutable.ArrayBuffer[Double]()
     if (needsFloor) for (_ <- 1 to nRuns) {
       val t0 = System.nanoTime()
       try {
         graft.streaming.Streams.streamFloorProbe(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        floors = ((System.nanoTime() - t0) / 1e9) :: floors
+        floors += (System.nanoTime() - t0) / 1e9
       } catch {
-        case scala.util.control.NonFatal(e) =>
-          errors("_floor") = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\r\n\t]", " ").take(200)
+        case scala.util.control.NonFatal(e) => probeErrors("_floor") = message(e)
       }
     }
-    if (floors.nonEmpty) errors.remove("_floor")
-    // MEDIAN of the probes, not min (r12 VERDICT #8): the floor swung
-    // 0.63<->1.26 s across full runs on this box; a min is one lucky
-    // probe, the median is the operating point the s-ops actually
-    // paid. The full probe series is emitted as floor_series so a
-    // suspicious gate run can be audited against the floor's own
-    // stability rather than a single scalar.
-    val floorSorted = floors.sorted
-    val floorSec =
-      if (floors.isEmpty) 0.0
-      else if (floorSorted.size % 2 == 1) floorSorted(floorSorted.size / 2)
-      // true median for even-length series: the upper-middle element
-      // alone would silently report the LARGER of a 2-probe pair,
-      // biasing every net-of-floor comparison low
-      else (floorSorted(floorSorted.size / 2 - 1) +
-        floorSorted(floorSorted.size / 2)) / 2.0
-    // The FS-metadata floor, same discipline (r13 VERDICT #3): the
-    // w-family's table-format ops are dominated by commit-protocol
-    // work — tiny parquet writes, manifest renames, directory
-    // listings — whose latency swings with box state (page cache,
-    // dirty writeback) independent of any code change; the judge's
-    // delayed same-code re-run flagged w08/w18/w22/w23 at 1.55-1.69x
-    // on 0.2-0.6 s absolute deltas. The probe performs one
-    // representative commit cycle (tiny 4-task parquet write through
-    // the same committer + rename + recursive list through the same
-    // Hadoop FS API the sinks use); bench_diff compares w-keys net of
-    // the run's own median, raw-confirmed exactly like the streaming
-    // floor.
+    if (floors.nonEmpty) probeErrors.remove("_floor")
+    // The FS-metadata floor, same discipline: the w-family's table-format
+    // ops are dominated by commit-protocol work (tiny parquet writes,
+    // manifest renames, directory listings) whose latency swings with
+    // the machine's state independent of any code change. The probe
+    // performs one representative commit cycle through the same
+    // committer and Hadoop FS API the sinks use; bench_diff compares
+    // w-keys net of the run's own median.
     val needsFsFloor =
-      queries.keys.exists(n => n.startsWith("w") && n != "w06_sink_streamed")
-    var fsFloors: List[Double] = Nil
+      queries.exists { case (n, _) => n.startsWith("w") && n != "w06_sink_streamed" }
+    val fsFloors = mutable.ArrayBuffer[Double]()
     // one untimed warmup probe first: the session's FIRST parquet
     // write pays committer/codegen init (measured 6.3 s vs a 0.5-0.9 s
     // steady state) and would poison a 3-probe median
@@ -110,91 +263,22 @@ object Bench {
         val it = fs.listFiles(t2, true)
         while (it.hasNext) it.next()
         fs.delete(new org.apache.hadoop.fs.Path(probe.toString), true)
-        if (warm > 0) fsFloors = ((System.nanoTime() - t0) / 1e9) :: fsFloors
+        if (warm > 0) fsFloors += (System.nanoTime() - t0) / 1e9
       } catch {
-        case scala.util.control.NonFatal(e) =>
-          errors("_fs_floor") = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\r\n\t]", " ").take(200)
+        case scala.util.control.NonFatal(e) => probeErrors("_fs_floor") = message(e)
       }
     }
-    if (fsFloors.nonEmpty) errors.remove("_fs_floor")
-    val fsSorted = fsFloors.sorted
-    val fsFloorSec =
-      if (fsFloors.isEmpty) 0.0
-      else if (fsSorted.size % 2 == 1) fsSorted(fsSorted.size / 2)
-      else (fsSorted(fsSorted.size / 2 - 1) + fsSorted(fsSorted.size / 2)) / 2.0
-    for (_ <- 1 to nRuns; (name, fn) <- queries) {
-      spark.catalog.clearCache() // no warm-cache runs: each timing does full work
-      val t0 = System.nanoTime()
-      // noop sink: materializes every row/column (count() would let
-      // Catalyst prune the computation away) with zero write cost
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        times(name) = ((System.nanoTime() - t0) / 1e9) :: times.getOrElse(name, Nil)
-      } catch {
-        case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\r\n\t]", " ").take(200)
-      }
-    }
-    // a query is "err" only if EVERY run failed: a transient failure
-    // followed by a success must not poison the entry
-    val results = queries.map { case (name, _) =>
-      val ok = times.getOrElse(name, Nil)
-      if (ok.nonEmpty) errors.remove(name)
-      name -> (if (ok.nonEmpty) ok.min else 0.0)
-    }
-    def jstr(s: String) = "\"" + s + "\""
-    // 3-decimal timings: full-precision doubles ballooned the per-query
-    // line past the driver's end-anchored tail capture at 128 queries
-    // (BENCH_r05/r06 recorded "parsed": null) — ms resolution is plenty
-    def jnum(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, v) =>
-      if (errors.contains(k)) jstr(k) + ":" + jstr("err") else jstr(k) + ":" + jnum(v)
-    }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, m) => jstr(k) + ":" + jstr(m.take(80)) }
-      .mkString("{", ",", "}")
-    val total = results.collect { case (k, v) if !errors.contains(k) => v }.sum
-    val floorSeries = floorSorted.map(jnum).mkString("[", ",", "]")
-    val fsFloorSeries = fsSorted.map(jnum).mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${results.size},"n_errors":${errors.size},"runs":$nRuns,"floor_sec":${jnum(floorSec)},"floor_series":$floorSeries,"fs_floor_sec":${jnum(fsFloorSec)},"fs_floor_series":$fsFloorSeries,"sf":"$sfDir","queries":$qs,"errors":$errJson}"""
-    // The full per-query line is ~4 KB at 174 queries — larger than the
-    // driver's ~2000-char END-anchored tail capture, so it can never be
-    // the parse target. Persist it to a file (default bench_results.json
-    // in the cwd, i.e. the repo root), print it first for humans, and
-    // print a SHORT summary line LAST so the tail capture always ends on
-    // a complete, parseable JSON object. The summary carries the headline
-    // numbers plus the 10 slowest per-query timings (regression hot spots)
-    // and the path to the full results file.
+    if (fsFloors.nonEmpty) probeErrors.remove("_fs_floor")
+    val outcomes = timeQueries(spark, sfDir, queries, nRuns)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
+    val (fullLine, chunkLines, summary) =
+      report(sfDir, nRuns, outPath, outcomes, floors.toSeq, fsFloors.toSeq, probeErrors.toMap)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"bench: could not write $outPath: ${e.getMessage}") }
-    val slowest = results.toSeq.filterNot { case (k, _) => errors.contains(k) }
-      .sortBy(-_._2).take(10)
-      .map { case (k, v) => jstr(k) + ":" + jnum(v) }.mkString("{", ",", "}")
-    // summary errors capped at 5 entries so a mass failure can't push the
-    // summary line itself past the tail capture (full detail is in the file)
-    val errHead = errors.take(5).map { case (k, m) => jstr(k) + ":" + jstr(m.take(60)) }
-      .mkString("{", ",", "}")
     println(fullLine)
-    // r15 (r14 VERDICT #2): the driver's END-anchored tail capture has
-    // never been able to parse the full per-query line (too long since
-    // r05 — "parsed": null in every BENCH_r*.json). Emit the per-query
-    // map AGAIN as self-contained ≤40-entry chunk lines, each a complete
-    // JSON object, immediately before the final summary line: whatever
-    // suffix of the output survives the tail capture contains whole,
-    // parseable {"metric":"chunk",...} objects. Timings are identical to
-    // the full line (same `results` map) — this is output formatting
-    // only, nothing about the measurement itself changed.
-    val chunkSeq = results.toSeq.grouped(40).toSeq
-    chunkSeq.zipWithIndex.foreach { case (grp, i) =>
-      val qsC = grp.map { case (k, v) =>
-        if (errors.contains(k)) jstr(k) + ":" + jstr("err") else jstr(k) + ":" + jnum(v)
-      }.mkString("{", ",", "}")
-      println(s"""{"metric":"chunk","i":$i,"n_chunks":${chunkSeq.size},"queries":$qsC}""")
-    }
-    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${results.size},"n_errors":${errors.size},"runs":$nRuns,"sf":"$sfDir","results_file":"$outPath","slowest":$slowest,"errors":$errHead}""")
+    chunkLines.foreach(println)
+    println(summary)
     spark.stop()
   }
 }

@@ -27,14 +27,7 @@ import org.apache.spark.sql.functions._
 object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     run(spark, srcDir, outDir, factorS.toInt)
     spark.stop()
   }

@@ -773,6 +773,79 @@ object ReliefQueries {
   private def entropy(ps: Seq[Double]): Double =
     -ps.filter(_ > 0.0).map(p => p * log2(p)).sum
 
+  /** What f10/f11/f13 derive from one [[bitBlocks]] result:
+    * the sorted labels, the row count `n`, per-dim ones per label
+    * (`onesL`) and in total (`ones`), and I(X;Y) per dim (`rel`).
+    */
+  private final case class BitContext(blocks: Map[Long, Array[Double]]) {
+    val D = 64
+    val labels = blocks.keys.toSeq.sorted
+    val n = labels.map(blocks(_)(0)).sum
+    val onesL = Array.tabulate(D)(d => labels.map(l => blocks(l)(1 + d)))
+    val ones = Array.tabulate(D)(d => onesL(d).sum)
+    def miCells(cells: Seq[(Double, Double, Double)]): Double =
+      cells.filter(_._1 > 0.0)
+        .map { case (c, ma, mb) => c / n * log2(c * n / (ma * mb)) }.sum
+    val rel = Array.tabulate(D) { d =>
+      miCells(labels.indices.flatMap { li =>
+        val nl = blocks(labels(li))(0)
+        val o = onesL(d)(li)
+        Seq((o, ones(d), nl), (nl - o, n - ones(d), nl))
+      })
+    }
+    /** n·p(i=1, j=1) over all labels, i < j. */
+    def n11(i: Int, j: Int): Double = labels.map(l => blocks(l)(1 + D + pidx(i, j))).sum
+
+    /** Σ of `term(bs, c, nl, o1s, pfs)` over the labels and the four
+      * (bf, bs) bit cells of the pair (f, s) whose count c is positive;
+      * nl is the label's row count, o1s its ones of s, and pfs
+      * n·p(f, s) marginal over labels. Every triple cell comes from
+      * the blocks by inclusion–exclusion.
+      */
+    def tripleSum(f: Int, s: Int)(
+        term: (Int, Double, Double, Double, Double) => Double): Double = {
+      val (i, j) = (math.min(f, s), math.max(f, s))
+      // pidx keys on the SORTED pair; ones11 is symmetric in (f, s)
+      val n11t = n11(i, j)
+      var acc = 0.0
+      labels.indices.foreach { li =>
+        val b = blocks(labels(li))
+        val nl = b(0)
+        val n11 = b(1 + D + pidx(i, j))
+        val o1f = onesL(f)(li); val o1s = onesL(s)(li)
+        val cells = Seq(
+          (0, 0, nl - o1f - o1s + n11), (0, 1, o1s - n11),
+          (1, 0, o1f - n11), (1, 1, n11))
+        cells.foreach { case (bf, bs, c) =>
+          if (c > 0.0) {
+            val pfs = (bf, bs) match {
+              case (1, 1) => n11t
+              case (1, 0) => ones(f) - n11t
+              case (0, 1) => ones(s) - n11t
+              case _      => n - ones(f) - ones(s) + n11t
+            }
+            acc += term(bs, c, nl, o1s, pfs)
+          }
+        }
+      }
+      acc
+    }
+  }
+
+  /** One-partition (`first`, dim, `score`) frame of ranked picks, with
+    * the same long/long/double schema when there are none.
+    */
+  private def picksFrame(spark: SparkSession, picks: Seq[(Long, Long, Double)],
+      first: String, score: String): DataFrame =
+    if (picks.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField(first, org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("dim", org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField(score, org.apache.spark.sql.types.DoubleType))))
+    else
+      spark.createDataFrame(spark.sparkContext.parallelize(picks, 1)).toDF(first, "dim", score)
+
   /** f10: FCBF — Fast Correlation-Based Filter (Yu & Liu, ICML 2003),
     * the symmetric-uncertainty selector the reference's own author
     * ships as a companion Spark package (sramirez/fast-mRMR lineage):
@@ -791,45 +864,23 @@ object ReliefQueries {
   def f10Fcbf(spark: SparkSession, dir: String): DataFrame = {
     val sel = fcbfSelect(spark, dir).take(10).zipWithIndex
       .map { case ((d, su), r) => (r + 1L, d.toLong, su) }
-    if (sel.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("rank", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("dim", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("su", org.apache.spark.sql.types.DoubleType))))
-    else
-      spark.createDataFrame(spark.sparkContext.parallelize(sel.toSeq, 1))
-        .toDF("rank", "dim", "su")
+    picksFrame(spark, sel, "rank", "su")
   }
 
   /** FCBF's predominant list (dim, SU_c) in selection order. */
   private def fcbfSelect(
       spark: SparkSession, dir: String): Seq[(Int, Double)] = {
-    val blocks = bitBlocks(spark, dir)
-    if (blocks.isEmpty) return Seq.empty
-    val D = 64
-    val labels = blocks.keys.toSeq.sorted
-    val n = labels.map(blocks(_)(0)).sum
+    val cx = BitContext(bitBlocks(spark, dir))
+    if (cx.labels.isEmpty) return Seq.empty
+    import cx._
     val hy = entropy(labels.map(blocks(_)(0) / n))
-    // per-dim: ones count per label and total; H(X); I(X;Y); SU_c
-    val onesL = Array.tabulate(D)(d => labels.map(l => blocks(l)(1 + d)))
-    val ones = Array.tabulate(D)(d => onesL(d).sum)
+    // per-dim: H(X); SU_c from I(X;Y)
     val hx = Array.tabulate(D)(d => entropy(Seq(ones(d) / n, (n - ones(d)) / n)))
-    def miCells(cells: Seq[(Double, Double, Double)]): Double =
-      cells.filter(_._1 > 0.0)
-        .map { case (c, ma, mb) => c / n * log2(c * n / (ma * mb)) }.sum
     val sucArr = Array.tabulate(D) { d =>
-      val cells = labels.indices.flatMap { li =>
-        val nl = blocks(labels(li))(0)
-        val o = onesL(d)(li)
-        Seq((o, ones(d), nl), (nl - o, n - ones(d), nl))
-      }
-      val mi = miCells(cells)
-      if (hx(d) + hy > 0.0) 2.0 * mi / (hx(d) + hy) else 0.0
+      if (hx(d) + hy > 0.0) 2.0 * rel(d) / (hx(d) + hy) else 0.0
     }
     def suPair(i: Int, j: Int): Double = {
-      val n11 = labels.map(l => blocks(l)(1 + D + pidx(i, j))).sum
+      val n11 = cx.n11(i, j)
       val n10 = ones(i) - n11
       val n01 = ones(j) - n11
       val n00 = n - ones(i) - ones(j) + n11
@@ -861,72 +912,21 @@ object ReliefQueries {
     * steps over precomputed 64×64 conditional-MI values, constant at
     * any corpus size.
     */
-  def f11Cmim(spark: SparkSession, dir: String): DataFrame = {
-    val picks = cmimSelect(spark, dir)
-      .map { case (t, d, s) => (t.toLong, d.toLong, s) }
-    if (picks.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("step", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("dim", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("score", org.apache.spark.sql.types.DoubleType))))
-    else
-      spark.createDataFrame(spark.sparkContext.parallelize(picks.toSeq, 1))
-        .toDF("step", "dim", "score")
-  }
+  def f11Cmim(spark: SparkSession, dir: String): DataFrame =
+    picksFrame(spark, cmimSelect(spark, dir)
+      .map { case (t, d, s) => (t.toLong, d.toLong, s) }, "step", "score")
 
   /** CMIM's greedy picks (step, dim, score). */
   private def cmimSelect(
       spark: SparkSession, dir: String): Seq[(Int, Int, Double)] = {
-    val blocks = bitBlocks(spark, dir)
-    if (blocks.isEmpty) return Seq.empty
-    val D = 64
-    val labels = blocks.keys.toSeq.sorted
-    val n = labels.map(blocks(_)(0)).sum
-    val onesL = Array.tabulate(D)(d => labels.map(l => blocks(l)(1 + d)))
-    val ones = Array.tabulate(D)(d => onesL(d).sum)
-    def miCells(cells: Seq[(Double, Double, Double)]): Double =
-      cells.filter(_._1 > 0.0)
-        .map { case (c, ma, mb) => c / n * log2(c * n / (ma * mb)) }.sum
-    val rel = Array.tabulate(D) { d =>
-      miCells(labels.indices.flatMap { li =>
-        val nl = blocks(labels(li))(0)
-        val o = onesL(d)(li)
-        Seq((o, ones(d), nl), (nl - o, n - ones(d), nl))
-      })
-    }
+    val cx = BitContext(bitBlocks(spark, dir))
+    if (cx.labels.isEmpty) return Seq.empty
+    import cx._
     // I(F;Y|S) = Σ_{bf,bs,y} p(f,s,y)·log2(p(f,s,y)·p(s) / (p(f,s)·p(s,y)))
-    def cmi(f: Int, s: Int): Double = {
-      val (i, j) = (math.min(f, s), math.max(f, s))
-      // n·p(f=1,s=1): pair-ones marginal over labels (note pidx keys
-      // on the SORTED pair; ones11 is symmetric in (f, s))
-      val n11t = labels.map(l => blocks(l)(1 + D + pidx(i, j))).sum
-      var acc = 0.0
-      labels.indices.foreach { li =>
-        val b = blocks(labels(li))
-        val nl = b(0)
-        val n11 = b(1 + D + pidx(i, j))
-        val o1f = onesL(f)(li); val o1s = onesL(s)(li)
-        // triple cells (bf, bs) for this label via inclusion–exclusion
-        val cells = Seq(
-          (0, 0, nl - o1f - o1s + n11), (0, 1, o1s - n11),
-          (1, 0, o1f - n11), (1, 1, n11))
-        cells.foreach { case (bf, bs, c) =>
-          if (c > 0.0) {
-            val ps = if (bs == 1) ones(s) else n - ones(s) // n·p(s)
-            val psy = if (bs == 1) o1s else nl - o1s // n·p(s,y)
-            val pfs = (bf, bs) match { // n·p(f,s)
-              case (1, 1) => n11t
-              case (1, 0) => ones(f) - n11t
-              case (0, 1) => ones(s) - n11t
-              case _      => n - ones(f) - ones(s) + n11t
-            }
-            acc += c / n * log2(c * ps / (pfs * psy))
-          }
-        }
-      }
-      acc
+    def cmi(f: Int, s: Int): Double = tripleSum(f, s) { (bs, c, nl, o1s, pfs) =>
+      val ps = if (bs == 1) ones(s) else n - ones(s) // n·p(s)
+      val psy = if (bs == 1) o1s else nl - o1s // n·p(s,y)
+      c / n * log2(c * ps / (pfs * psy))
     }
     val picks = scala.collection.mutable.ArrayBuffer[(Int, Int, Double)]()
     val minc = Array.fill(D)(Double.MaxValue)
@@ -968,20 +968,9 @@ object ReliefQueries {
     * blocks; the greedy itself is driver arithmetic on 64×64
     * precomputed pair scores (the f04/e13 constant-work precedent).
     */
-  def f13Jmi(spark: SparkSession, dir: String): DataFrame = {
-    val picks = jmiSelect(spark, dir)
-      .map { case (t, d, s) => (t.toLong, d.toLong, s) }
-    if (picks.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("step", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("dim", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("score", org.apache.spark.sql.types.DoubleType))))
-    else
-      spark.createDataFrame(spark.sparkContext.parallelize(picks.toSeq, 1))
-        .toDF("step", "dim", "score")
-  }
+  def f13Jmi(spark: SparkSession, dir: String): DataFrame =
+    picksFrame(spark, jmiSelect(spark, dir)
+      .map { case (t, d, s) => (t.toLong, d.toLong, s) }, "step", "score")
 
   /** JMI's greedy picks (step, dim, score): score at step 1 is
     * I(F;Y); at step t ≥ 2 it is the running Σ_{S picked so far}
@@ -989,50 +978,12 @@ object ReliefQueries {
     */
   private def jmiSelect(
       spark: SparkSession, dir: String): Seq[(Int, Int, Double)] = {
-    val blocks = bitBlocks(spark, dir)
-    if (blocks.isEmpty) return Seq.empty
-    val D = 64
-    val labels = blocks.keys.toSeq.sorted
-    val n = labels.map(blocks(_)(0)).sum
-    val onesL = Array.tabulate(D)(d => labels.map(l => blocks(l)(1 + d)))
-    val ones = Array.tabulate(D)(d => onesL(d).sum)
-    def miCells(cells: Seq[(Double, Double, Double)]): Double =
-      cells.filter(_._1 > 0.0)
-        .map { case (c, ma, mb) => c / n * log2(c * n / (ma * mb)) }.sum
-    val rel = Array.tabulate(D) { d =>
-      miCells(labels.indices.flatMap { li =>
-        val nl = blocks(labels(li))(0)
-        val o = onesL(d)(li)
-        Seq((o, ones(d), nl), (nl - o, n - ones(d), nl))
-      })
-    }
+    val cx = BitContext(bitBlocks(spark, dir))
+    if (cx.labels.isEmpty) return Seq.empty
+    import cx._
     // I(F,S;Y) = Σ_{bf,bs,y} p(f,s,y)·log2(p(f,s,y) / (p(f,s)·p(y)))
-    def jmi(f: Int, s: Int): Double = {
-      val (i, j) = (math.min(f, s), math.max(f, s))
-      val n11t = labels.map(l => blocks(l)(1 + D + pidx(i, j))).sum
-      var acc = 0.0
-      labels.indices.foreach { li =>
-        val b = blocks(labels(li))
-        val nl = b(0)
-        val n11 = b(1 + D + pidx(i, j))
-        val o1f = onesL(f)(li); val o1s = onesL(s)(li)
-        val cells = Seq(
-          (0, 0, nl - o1f - o1s + n11), (0, 1, o1s - n11),
-          (1, 0, o1f - n11), (1, 1, n11))
-        cells.foreach { case (bf, bs, c) =>
-          if (c > 0.0) {
-            val pfs = (bf, bs) match { // n·p(f,s), marginal over labels
-              case (1, 1) => n11t
-              case (1, 0) => ones(f) - n11t
-              case (0, 1) => ones(s) - n11t
-              case _      => n - ones(f) - ones(s) + n11t
-            }
-            acc += c / n * log2(c * n / (pfs * nl))
-          }
-        }
-      }
-      acc
-    }
+    def jmi(f: Int, s: Int): Double =
+      tripleSum(f, s)((_, c, nl, _, pfs) => c / n * log2(c * n / (pfs * nl)))
     val picks = scala.collection.mutable.ArrayBuffer[(Int, Int, Double)]()
     val sums = Array.fill(D)(0.0)
     val selected = scala.collection.mutable.ArrayBuffer[Int]()

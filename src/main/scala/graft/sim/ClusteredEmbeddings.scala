@@ -72,13 +72,7 @@ object ClusteredEmbeddings {
     val outDir = args(0)
     val n = args(1).toLong
     val centroids = if (args.length > 2) args(2).toInt else DefaultCentroids
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     run(spark, outDir, n, centroids)
     println(s"[clustered] wrote $outDir/embeddings.parquet n=$n centroids=$centroids")
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Serving-recall probe — the measurement harness behind the e23
@@ -24,14 +24,7 @@ object RecallProbe {
     val dir = args(0)
     val k = args(1).toInt
     val rounds = args(2).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val n = Sim.corpusN(spark, dir)
     val cap = if (args.length > 3) args(3).toInt else Sim.maxBucketOf(n)
     import graft.Checkpoints._

@@ -600,9 +600,9 @@ object Sim {
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (dotOf(spark, "qv", "v") / (col("qn") * col("nrm"))).as("cosine"))
-    // r15: dropDuplicates + row_number window → topKScored (one
+    // r15: dropDuplicates + row_number window → topByCosine (one
     // partial-aggregating exchange; same rows by the same total order)
-    topKScored(scored, 10)
+    topByCosine(scored, 10, "neighbor_id")
   }
 
   /** e11: tombstoned ANN serving — row-level deletes applied to the
@@ -632,8 +632,8 @@ object Sim {
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (dotOf(spark, "qv", "v") / (col("qn") * col("nrm"))).as("cosine"))
-    // r15: dropDuplicates + row_number window → topKScored (see e06)
-    topKScored(scored, 10)
+    // r15: dropDuplicates + row_number window → topByCosine (see e06)
+    topByCosine(scored, 10, "neighbor_id")
   }
 
   /** e12: delta-serving ANN — the other half of e11's index-freshness
@@ -666,9 +666,9 @@ object Sim {
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (dotOf(spark, "qv", "v") / (col("qn") * col("nrm"))).as("cosine"))
-    // r15: dropDuplicates + row_number window → topKScored (see e06;
+    // r15: dropDuplicates + row_number window → topByCosine (see e06;
     // the stale/delta sides are id-disjoint, so pairs stay unique)
-    topKScored(scored, 10)
+    topByCosine(scored, 10, "neighbor_id")
   }
 
   /** e13: MMR diversity re-rank — the serving-layer step after any
@@ -1067,16 +1067,16 @@ object Sim {
     val entries = upperIds
       .withColumn("perm", col("node_id") % P * lit(888000131L) % P)
       .orderBy("perm", "node_id").limit(uEntries).select("node_id")
-    val u0 = serveTopB(serveScore(spark, dir, q)(
+    val u0 = topByCosine(serveScore(spark, dir, q)(
       q.select("query_id").crossJoin(broadcast(entries))
-        .where(col("query_id") =!= col("node_id"))), uKeep)
+        .where(col("query_id") =!= col("node_id"))), uKeep, "node_id")
     def uhop(beam: DataFrame): DataFrame = {
       val expanded = beam.select("query_id", "node_id")
         .join(gu, Seq("node_id"))
         .select(col("query_id"), col("neighbor_id").as("node_id"))
         .unionByName(beam.select("query_id", "node_id"))
         .where(col("query_id") =!= col("node_id"))
-      serveTopB(serveScore(spark, dir, q)(expanded), uKeep)
+      topByCosine(serveScore(spark, dir, q)(expanded), uKeep, "node_id")
     }
     // cut between the levels (the e23 per-round discipline): the
     // descent result is ≤ |queries|·ServeEntries tiny rows, and
@@ -1084,8 +1084,8 @@ object Sim {
     // (u0→u2→h1→h3) into one analysis tree. The final keep is always
     // ServeEntries — layer 0 starts from exactly as many scored rows
     // as e25's election hands it, whatever the descent explored.
-    val descended = serveTopB(
-      (1 to uHops).foldLeft(u0)((b, _) => uhop(b)), ServeEntries).cutLineage
+    val descended = topByCosine(
+      (1 to uHops).foldLeft(u0)((b, _) => uhop(b)), ServeEntries, "node_id").cutLineage
     beamWalk(spark, dir, g0, ServeHops, descended)
   }
 
@@ -1175,7 +1175,7 @@ object Sim {
         .join(g, Seq("node_id"))
         .select(col("query_id"), col("neighbor_id").as("node_id"))
         .unionByName(beam.select("query_id", "node_id"))
-      serveTopB(serveScore(spark, dir, q)(expanded), keep)
+      topByCosine(serveScore(spark, dir, q)(expanded), keep, "node_id")
     }
     val uKeep = upperKeepOf(canonN)
     // seed the descent with the query's OWN canonical node next to the
@@ -1187,11 +1187,11 @@ object Sim {
       .join(members.select(col("vec_id").as("query_id"),
         col("canon_id").as("node_id")), Seq("query_id"))
       .select("query_id", "node_id")
-    val u0 = serveTopB(serveScore(spark, dir, q)(
+    val u0 = topByCosine(serveScore(spark, dir, q)(
       q.select("query_id").crossJoin(broadcast(entries))
-        .unionByName(selfSeed)), uKeep)
-    val descended = serveTopB(
-      (1 to UpperHops).foldLeft(u0)((b, _) => hop(gu, uKeep)(b)), ServeEntries)
+        .unionByName(selfSeed)), uKeep, "node_id")
+    val descended = topByCosine(
+      (1 to UpperHops).foldLeft(u0)((b, _) => hop(gu, uKeep)(b)), ServeEntries, "node_id")
       .cutLineage
     val walked = (1 to ServeHops).foldLeft(descended)((b, _) => hop(g0, ServeBeam)(b))
     walked
@@ -1251,7 +1251,7 @@ object Sim {
       .join(probed, Seq("centroid_id"))
       .where(col("query_id") =!= col("node_id"))
       .select("query_id", "node_id")
-    val beam0 = serveTopB(serveScore(spark, dir, q)(cand), ServeEntries)
+    val beam0 = topByCosine(serveScore(spark, dir, q)(cand), ServeEntries, "node_id")
     beamWalk(spark, dir, knnGraphIndex(spark, dir), ServeHops, beam0)
   }
 
@@ -1277,50 +1277,29 @@ object Sim {
         (dotOf(spark, "qv", "v") / (col("qn") * col("nrm"))).as("cosine"))
   }
 
-  /** Per-query top-b of a scored (query_id, node_id, cosine) frame in
-    * ONE keyed aggregate (r14, guide §2.3/§2.4): collect_set dedups
-    * candidate rows (the hop expansions surface the same node through
-    * several edges — scoring is deterministic, so duplicates are
-    * bit-identical structs), array_sort over struct(-cosine, node_id)
-    * is exactly the old row_number total order (cosine desc, node_id
-    * asc), slice keeps b. Replaces the per-hop `distinct()` exchange +
-    * row_number window (2 exchanges + a sort per hop) with one
-    * partial-aggregating exchange; the serve chains are ~5 of these
-    * per query, all on beam-bounded frames.
-    */
-  /** Per-query top-k of a scored (query_id, neighbor_id, cosine) frame
-    * — the serveTopB device applied to the probe-join serves (r15, r14
-    * VERDICT #6; guide §2.3/§2.4): collect_set dedups re-surfaced
-    * candidates (the probe set is array_union'd distinct and an index
-    * vector lives in exactly ONE bucket, so a (query, neighbor) pair
-    * occurs once per frame — and if a caller ever re-surfaces one,
-    * scoring is deterministic so the duplicate structs are
-    * bit-identical), array_sort over struct(-cosine, neighbor_id)
-    * reproduces the old row_number total order (cosine desc,
-    * neighbor_id asc) exactly, slice keeps k. Replaces the old
-    * dropDuplicates + row_number window tail (2 exchanges + a sort)
-    * with ONE partial-aggregating exchange. Per-query candidate sets
-    * here are probe-bounded (≤ probes × bucket occupancy), so the
-    * per-group aggregate buffer is bounded — do NOT reuse this on
-    * corpus-sized candidate frames (e14/e15's ranking window stays a
-    * window for exactly that reason, guide §5). NaN cosines would sort
-    * last instead of first under the negated key — unreachable today
+  /** Per-query top-k of a scored (query_id, `id`, cosine) frame in
+    * ONE keyed aggregate (r14/r15, guide §2.3/§2.4): collect_set dedups
+    * re-surfaced candidates (the serve hop expansions surface the same
+    * node through several edges; scoring is deterministic, so the
+    * duplicates are bit-identical structs), array_sort over
+    * struct(-cosine, id) is exactly the row_number total order (cosine
+    * desc, id asc), slice keeps k. Replaces a distinct/dropDuplicates +
+    * row_number window tail (2 exchanges + a sort) with one
+    * partial-aggregating exchange. Serves on `node_id` (the beam
+    * walks) and on `neighbor_id` (the probe-join serves). Per-query
+    * candidate sets here are beam- or probe-bounded, so the per-group
+    * aggregate buffer is bounded — do NOT reuse this on corpus-sized
+    * candidate frames (e14/e15's ranking window stays a window for
+    * exactly that reason, guide §5). NaN cosines would sort last
+    * instead of first under the negated key — unreachable today
     * because [[emb]] drops zero-norm vectors.
     */
-  private def topKScored(scored: DataFrame, k: Int): DataFrame =
+  private def topByCosine(scored: DataFrame, k: Int, id: String): DataFrame =
     scored.groupBy("query_id")
       .agg(slice(array_sort(collect_set(
-        struct(negate(col("cosine")).as("nc"), col("neighbor_id")))), 1, k).as("top"))
+        struct(negate(col("cosine")).as("nc"), col(id)))), 1, k).as("top"))
       .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.neighbor_id").as("neighbor_id"),
-        negate(col("t.nc")).as("cosine"))
-
-  private def serveTopB(scored: DataFrame, b: Int): DataFrame =
-    scored.groupBy("query_id")
-      .agg(slice(array_sort(collect_set(
-        struct(negate(col("cosine")).as("nc"), col("node_id")))), 1, b).as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.node_id").as("node_id"),
+      .select(col("query_id"), col(s"t.$id").as(id),
         negate(col("t.nc")).as("cosine"))
 
   /** The beam walk proper, entry frame pluggable: `beam0` is a scored
@@ -1332,7 +1311,7 @@ object Sim {
       beam0: DataFrame): DataFrame = {
     val q = serveQueries(spark, dir)
     def hop(beam: DataFrame): DataFrame = {
-      // no distinct: serveTopB's collect_set dedups the multi-edge
+      // no distinct: topByCosine's collect_set dedups the multi-edge
       // re-surfacings (identical scored structs), one exchange instead
       // of two
       val expanded = beam.select("query_id", "node_id")
@@ -1340,10 +1319,10 @@ object Sim {
         .select(col("query_id"), col("neighbor_id").as("node_id"))
         .unionByName(beam.select("query_id", "node_id"))
         .where(col("query_id") =!= col("node_id"))
-      serveTopB(serveScore(spark, dir, q)(expanded), ServeBeam)
+      topByCosine(serveScore(spark, dir, q)(expanded), ServeBeam, "node_id")
     }
     val beamN = (1 to hops).foldLeft(beam0)((b, _) => hop(b))
-    serveTopB(beamN, 10)
+    topByCosine(beamN, 10, "node_id")
       .select(col("query_id"), col("node_id").as("neighbor_id"), col("cosine"))
   }
 
@@ -1355,9 +1334,9 @@ object Sim {
     val entries = e.select(col("vec_id").as("node_id"))
       .withColumn("perm", col("node_id") % P * lit(888000131L) % P)
       .orderBy("perm", "node_id").limit(ServeEntries).select("node_id")
-    val beam0 = serveTopB(serveScore(spark, dir, q)(
+    val beam0 = topByCosine(serveScore(spark, dir, q)(
       q.select("query_id").crossJoin(broadcast(entries))
-        .where(col("query_id") =!= col("node_id"))), ServeBeam)
+        .where(col("query_id") =!= col("node_id"))), ServeBeam, "node_id")
     beamWalk(spark, dir, g, hops, beam0)
   }
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-artifact emitter for the fixed-budget kernels' fixpoint
   * standing (r12 VERDICT #7): runs [[graft.graph.Graph.convergenceCensus]]
   * at each given SF dir and writes one JSON object —
@@ -16,14 +14,7 @@ object Convergence {
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val dirs = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val entries = dirs.map { dir =>
       val rows = graft.graph.Graph.convergenceCensus(spark, dir).collect()
         .map { r =>

@@ -402,60 +402,61 @@ class ReliefSpec extends SparkSpec {
       z ^ (z >>> 31)
     }
     val f = java.nio.file.Files.createTempFile("graft_kddb_scale", ".txt")
-    val w = java.nio.file.Files.newBufferedWriter(f)
-    try {
-      var i = 0
-      while (i < nRows) {
-        val label = i % 2
-        // 12 deterministic noise dims spread over the full 30M range
-        // (~240k distinct across the corpus), one planted dim whose
-        // value is the label signal
-        val idxs = (0 until 12).map { j =>
-          1 + math.floorMod(mix(i.toLong * 31 + j), nFeat - 2).toInt
-        }.distinct.sorted
-        val sb = new StringBuilder
-        sb.append(label)
-        idxs.foreach { ix =>
-          sb.append(' ').append(ix).append(':')
-            .append(0.25 * (1 + math.floorMod(mix(ix.toLong ^ i), 3)))
-        }
-        sb.append(' ').append(planted + 1).append(':')
-          .append(if (label == 0) -1.0 else 1.0)
-        w.write(sb.toString); w.newLine()
-        i += 1
-      }
-    } finally w.close()
-    val df = spark.read.format("libsvm")
-      .option("numFeatures", nFeat.toString).load(f.toString)
-    val t0 = System.nanoTime()
-    val m = new ReliefFRSelector()
-      .setInputCol("features").setLabelCol("label").setOutputCol("out")
-      .setNumTopFeatures(10).setNumNeighbors(3)
-      .setEstimationRatio(200.0 / nRows) // pinned absolute budget: ~200 queries
-      .setBatchSize(1.0).setHighDimMode(true).setSeed(123456789L)
-      .fit(df)
-    val fitSec = (System.nanoTime() - t0) / 1e9
-    assert(m.numFeatures == nFeat)
-    assert(m.stdSelection.head == planted,
-      s"planted 30M-range feature not top-ranked: ${m.stdSelection.mkString(",")}")
-    // weights bounded by ACTIVE dims: far below nFeat, and every
-    // weighted feature is one that actually appears in the corpus
-    assert(m.weightedFeatures.length < 1000000,
-      s"weight payload not sparse: ${m.weightedFeatures.length}")
-    assert(m.weightedFeatures.forall(fi => fi == planted || fi < nFeat - 1))
-    assert(m.weightOf(planted) == 1.0, s"planted weight ${m.weightOf(planted)}")
-    // an untouched dim reads the shared absent weight without densifying
-    assert(m.weightOf(17) == m.defaultWeight)
-    // persistence is sparse too: round-trip at 30M dims in spec time
     val dir = java.nio.file.Files.createTempDirectory("graft_kddb_model").toString
-    m.write.overwrite().save(dir)
-    val loaded = ReliefFRSelectorModel.load(dir)
-    assert(loaded.numFeatures == nFeat &&
-      loaded.stdSelection.toSeq == m.stdSelection.toSeq &&
-      loaded.weightedFeatures.toSeq == m.weightedFeatures.toSeq)
-    info(f"30M-dim fit: $fitSec%.1f s, ${m.weightedFeatures.length} active-dim weights " +
-      f"(${100.0 * m.weightedFeatures.length / nFeat}%.3f%% of nFeat)")
-    java.nio.file.Files.delete(f)
+    try {
+      val w = java.nio.file.Files.newBufferedWriter(f)
+      try {
+        var i = 0
+        while (i < nRows) {
+          val label = i % 2
+          // 12 deterministic noise dims spread over the full 30M range
+          // (~240k distinct across the corpus), one planted dim whose
+          // value is the label signal
+          val idxs = (0 until 12).map { j =>
+            1 + math.floorMod(mix(i.toLong * 31 + j), nFeat - 2).toInt
+          }.distinct.sorted
+          val sb = new StringBuilder
+          sb.append(label)
+          idxs.foreach { ix =>
+            sb.append(' ').append(ix).append(':')
+              .append(0.25 * (1 + math.floorMod(mix(ix.toLong ^ i), 3)))
+          }
+          sb.append(' ').append(planted + 1).append(':')
+            .append(if (label == 0) -1.0 else 1.0)
+          w.write(sb.toString); w.newLine()
+          i += 1
+        }
+      } finally w.close()
+      val df = spark.read.format("libsvm")
+        .option("numFeatures", nFeat.toString).load(f.toString)
+      val t0 = System.nanoTime()
+      val m = new ReliefFRSelector()
+        .setInputCol("features").setLabelCol("label").setOutputCol("out")
+        .setNumTopFeatures(10).setNumNeighbors(3)
+        .setEstimationRatio(200.0 / nRows) // pinned absolute budget: ~200 queries
+        .setBatchSize(1.0).setHighDimMode(true).setSeed(123456789L)
+        .fit(df)
+      val fitSec = (System.nanoTime() - t0) / 1e9
+      assert(m.numFeatures == nFeat)
+      assert(m.stdSelection.head == planted,
+        s"planted 30M-range feature not top-ranked: ${m.stdSelection.mkString(",")}")
+      // weights bounded by ACTIVE dims: far below nFeat, and every
+      // weighted feature is one that actually appears in the corpus
+      assert(m.weightedFeatures.length < 1000000,
+        s"weight payload not sparse: ${m.weightedFeatures.length}")
+      assert(m.weightedFeatures.forall(fi => fi == planted || fi < nFeat - 1))
+      assert(m.weightOf(planted) == 1.0, s"planted weight ${m.weightOf(planted)}")
+      // an untouched dim reads the shared absent weight without densifying
+      assert(m.weightOf(17) == m.defaultWeight)
+      // persistence is sparse too: round-trip at 30M dims in spec time
+      m.write.overwrite().save(dir)
+      val loaded = ReliefFRSelectorModel.load(dir)
+      assert(loaded.numFeatures == nFeat &&
+        loaded.stdSelection.toSeq == m.stdSelection.toSeq &&
+        loaded.weightedFeatures.toSeq == m.weightedFeatures.toSeq)
+      info(f"30M-dim fit: $fitSec%.1f s, ${m.weightedFeatures.length} active-dim weights " +
+        f"(${100.0 * m.weightedFeatures.length / nFeat}%.3f%% of nFeat)")
+    } finally Seq(f.toFile, new java.io.File(dir)).foreach(FileUtils.deleteQuietly)
   }
 
   test("relief_knn matches a brute-force local computation") {

@@ -6,7 +6,8 @@ Usage:
 
 Defaults: current = bench_results.json (written by graft.Bench), baseline =
 BENCH_BASELINE.json (committed per-query sf0.1 timings). Exit code is non-zero
-when any query regresses by more than REGRESSION_FACTOR, errors, or is missing
+when any query regresses by more than REGRESSION_FACTOR, errors in any run
+(`err_runs` > 0 in its `detail` entry), or is missing
 from the current run — so `sbt "runMain graft.Bench" && python3
 tools/bench_diff.py` fails loudly on the kind of silent break that hit the
 events family in round 6 (20 queries vanished from the run without any gate
@@ -116,8 +117,10 @@ def main():
         if c is None:
             failures.append(f"MISSING  {name}: in baseline, absent from current run")
             continue
-        if c == "err" or name in cur.get("errors", {}):
-            failures.append(f"ERROR    {name}: {cur.get('errors', {}).get(name, 'err')}")
+        err_runs = cur.get("detail", {}).get(name, {}).get("err_runs", 0)
+        if c == "err" or name in cur.get("errors", {}) or err_runs > 0:
+            runs = f" ({err_runs} of {cur.get('runs')} runs failed)" if err_runs else ""
+            failures.append(f"ERROR    {name}: {cur.get('errors', {}).get(name, 'err')}{runs}")
             continue
         if b == "err":
             continue  # baseline itself was broken for this query; can only improve
