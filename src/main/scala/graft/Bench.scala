@@ -201,7 +201,7 @@ object Bench {
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val spark = LocalSession()
     // A/B harness hooks: SPARK_GRAFT_CONF="k=v;k=v" sets extra runtime
-    // confs (e.g. spark.graft.fusedKernels=false); SPARK_GRAFT_QUERIES
+    // confs (e.g. spark.graft.scanFanOut=false); SPARK_GRAFT_QUERIES
     // ="d06,d07" restricts the run to a comma-separated subset of name
     // prefixes so a focused comparison doesn't pay the full pass per arm.
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))

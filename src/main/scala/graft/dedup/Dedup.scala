@@ -77,22 +77,6 @@ object Dedup {
     */
   val P = graft.text.Text.FpMod // 1e9+7
 
-  /** Fused single-expression kernels (graft_minhash_str /
-    * graft_simhash_str) vs the two-step native path (graft_polyhash +
-    * graft_minhash/graft_simhash): both are codegen'd and bit-identical;
-    * this conf exists so the two can be A/B-benched on the same build.
-    * Default true — the r5 A/B (SURVEY §9) measured the fused path
-    * faster on the hot dedup family.
-    */
-  private def fusedKernels(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.fusedKernels").forall(_.toBoolean)
-
-  /** MinHash signature: NumHashes universal-hash minima over shingles.
-    * Each shingle string is poly-hashed to [0, P) ONCE; the per-seed
-    * "permutations" are (a_s·h + b_s) mod P — 64× less string hashing
-    * than the naive formulation. One projection, codegen'd natively
-    * when the graft extensions are installed.
-    */
   /** The per-shingle mod-prime poly hash as a SQL expression over a
     * `shingles` column — the signature substrate's own hashing
     * ([[withSignature]]'s first stage), exposed for d40's hashed
@@ -105,31 +89,24 @@ object Dedup {
     else
       s"transform(shingles, s -> aggregate(split(s, ''), 17L, (b, c) -> (b * 31 + ascii(c)) % $P))"
 
-  def withSignature(sh: DataFrame): DataFrame = {
-    val fns = sh.sparkSession.catalog
-    if (fusedKernels(sh.sparkSession) && fns.functionExists("graft_minhash_str"))
+  /** MinHash signature: NumHashes universal-hash minima over shingles.
+    * Each shingle string is poly-hashed to [0, P) ONCE; the per-seed
+    * "permutations" are (a_s·h + b_s) mod P — 64× less string hashing
+    * than the naive formulation. One projection, codegen'd natively
+    * when the graft extensions are installed.
+    */
+  def withSignature(sh: DataFrame): DataFrame =
+    if (sh.sparkSession.catalog.functionExists("graft_minhash_str"))
       // fully fused shingles→signature kernel (MinHashFromStrings):
       // no transform() layer, no intermediate hash array —
-      // bit-identical to the two-step path below
-      return sh.withColumn("sig", expr(s"graft_minhash_str(shingles, $NumHashes)"))
-    val hashExpr =
-      if (fns.functionExists("graft_polyhash"))
-        "transform(shingles, s -> graft_polyhash(s, 17, 31))"
-      else
-        s"transform(shingles, s -> aggregate(split(s, ''), 17L, (b, c) -> (b * 31 + ascii(c)) % $P))"
-    val sigExpr =
-      if (fns.functionExists("graft_minhash"))
-        // native fused loop (graft.functions.MinHashSignature) —
-        // bit-identical to the fallback below
-        s"graft_minhash(shash, $NumHashes)"
-      else
-        s"transform(sequence(0, ${NumHashes - 1}), " +
+      // bit-identical to the SQL fallback below
+      sh.withColumn("sig", expr(s"graft_minhash_str(shingles, $NumHashes)"))
+    else
+      sh.withColumn("shash", expr(hashedShinglesExpr(sh.sparkSession)))
+        .withColumn("sig", expr(s"transform(sequence(0, ${NumHashes - 1}), " +
           s"s -> array_min(transform(shash, h -> " +
-          s"(((s+1) * 906150257L) % $P * pmod(h, $P) + (s * 741103597L + 13L) % $P) % $P)))"
-    sh.withColumn("shash", expr(hashExpr))
-      .withColumn("sig", expr(sigExpr))
-      .drop("shash")
-  }
+          s"(((s+1) * 906150257L) % $P * pmod(h, $P) + (s * 741103597L + 13L) % $P) % $P)))"))
+        .drop("shash")
 
   /** (doc_id, shingles, sig), persisted: the signature computation is
     * the expensive projection (NumHashes minima per doc) and is read
@@ -536,24 +513,17 @@ object Dedup {
     * ~60 bits of SQL-reproducible entropy (bits 60-63 are always 0;
     * the 16-bit chunk buckets over the low 48 bits are unaffected).
     */
-  def simhash(df: DataFrame, toksCol: String): Column = {
-    if (fusedKernels(df.sparkSession) &&
-        df.sparkSession.catalog.functionExists("graft_simhash_str"))
+  def simhash(df: DataFrame, toksCol: String): Column =
+    if (df.sparkSession.catalog.functionExists("graft_simhash_str"))
       // fully fused tokens→simhash kernel (SimHashFromStrings) —
-      // bit-identical to the two-step path below
-      return expr(s"graft_simhash_str($toksCol)")
-    // hash each token once; per-bit votes then only shift/mask longs
-    val thash =
-      if (df.sparkSession.catalog.functionExists("graft_polyhash"))
-        s"transform($toksCol, t -> graft_polyhash(t, 17, 31) * ${P}L + graft_polyhash(t, 19, 37))"
-      else
+      // bit-identical to the SQL fallback below
+      expr(s"graft_simhash_str($toksCol)")
+    else {
+      // hash each token once; per-bit votes then only shift/mask longs
+      val thash =
         s"transform($toksCol, t -> " +
           s"aggregate(split(t, ''), 17L, (b, c) -> (b * 31 + ascii(c)) % $P) * ${P}L + " +
           s"aggregate(split(t, ''), 19L, (b, c) -> (b * 37 + ascii(c)) % $P))"
-    if (df.sparkSession.catalog.functionExists("graft_simhash"))
-      // native fused loop (graft.functions.SimHash64) — bit-identical
-      expr(s"graft_simhash($thash)")
-    else {
       val bitVotes =
         s"""aggregate($thash,
            |  transform(sequence(0, 63), b -> 0L),
@@ -564,7 +534,6 @@ object Dedup {
         s"""aggregate(zip_with($bitVotes, sequence(0, 63),
            |  (c, b) -> if(c > 0, shiftleft(1L, b), 0L)), 0L, (a, x) -> a | x)""".stripMargin)
     }
-  }
 
   /** d07: SimHash near-dup — bucket by 16-bit chunks (any pair within
     * hamming distance 4 shares at least one identical chunk of the 4),

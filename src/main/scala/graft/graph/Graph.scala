@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -71,15 +71,6 @@ object Graph {
     pagerankFrom(nodes, counts)
   }
 
-  /** The shared damped power-iteration kernel over (nodes,
-    * edge-count) frames — g01 feeds it q39's batch census, s28 the
-    * streamed transition census, g04 the user-handoff census; the w
-    * normalization (row-stochastic per source, q39's p_trans formula)
-    * lives HERE so all paths compute bit-identical weights. Returns
-    * the UNROUNDED (node, pr) frame; rank layers live in
-    * [[pagerankFrom]] (global rank — domain-bounded graphs only) and
-    * [[pagerankTopN]] (top-N merge — the unbounded-domain path).
-    */
   /** One-row `(rounds, changed_last_round)` convergence signal for a
     * fixed-budget kernel: how many keys still changed between the
     * state ENTERING the final round and the state it produced. Both
@@ -123,22 +114,47 @@ object Graph {
       nodesIn: DataFrame, counts: DataFrame): DataFrame =
     pagerankScoresTracked(nodesIn, counts)._1
 
-  /** [[pagerankScores]] plus its convergence signal. The first
-    * [[PrIters]] rounds are the unconditional documented budget
-    * (preserving every historical pin where that budget already
-    * reached the 6-decimal fixpoint); past it the rounds are
-    * QUANT-GATED up to [[PrMaxIters]] (r13 VERDICT #5: the sf1
-    * handoff graph still had 1 172 ranks moving at the output
-    * quantization after 10 rounds — measured offline it needs 23):
-    * before each extra round both engines count the nodes whose
-    * round(pr, 6) moved between the two previous frontiers and stop
-    * on zero. The gate is computed on the 6-decimal OUTPUT contract,
-    * where the engines' ulp-level float drift is already absorbed, so
-    * the oracle can mirror the stop decision layer by layer (a CASE
-    * on the same count) and stay bit-equal at any corpus size.
+  /** [[pagerankScores]] plus its convergence signal: [[powerIteration]]
+    * with the uniform teleport, PR₀ = 1/N and the dangling mass shared
+    * out as dang/N. N is ONE driver count up front and a literal in the
+    * update expression.
     */
   private[graft] def pagerankScoresTracked(
       nodesIn: DataFrame, counts: DataFrame): (DataFrame, DataFrame) = {
+    val nodes = nodesIn.cutLineageLazy
+    val n: Double = nodes.count().toDouble
+    powerIteration("pagerank", nodes, counts, lit(1.0 / n),
+      lit((1.0 - Damping) / n), _ / lit(n), PrMaxIters)
+  }
+
+  /** The damped power-iteration kernel behind PageRank (g01, g04, s28,
+    * s31) and personalized PageRank (g08, s35) over a (nodes,
+    * edge-count) pair. The w normalization (row-stochastic per source,
+    * q39's p_trans formula) lives HERE so every path computes
+    * bit-identical weights. Each round is
+    * `pr'(v) = teleport + d·(Σ_{u→v} pr(u)·w(u,v) + dangShare(dang))`
+    * with `dang` the summed rank of the nodes without out-edges; the
+    * callers pass only what differs — the start value, the teleport
+    * term, the dangling share and the round cap — as column
+    * expressions, so each variant keeps its own IEEE expression.
+    * `nodes` holds `node` plus any columns those expressions read
+    * (PPR's teleport vector `t`); they ride on every round's frame.
+    * Returns the UNROUNDED (node, pr) frame and its signal; rank
+    * layers live in [[pagerankFrom]] (global rank — domain-bounded
+    * graphs only) and [[topRanked]] (top-N merge — the
+    * unbounded-domain path).
+    *
+    * The first [[PrIters]] rounds are the unconditional documented
+    * budget (preserving every historical pin where that budget already
+    * reached the 6-decimal fixpoint); past it the rounds are
+    * QUANT-GATED up to `cap` (r13 VERDICT #5: the sf1 handoff graph
+    * still had 1 172 ranks moving at the output quantization after 10
+    * rounds — measured offline it needs 23): see [[quantGatedRounds]].
+    */
+  private def powerIteration(
+      tag: String, nodes: DataFrame, counts: DataFrame,
+      start: Column, teleport: Column, dangShare: Column => Column,
+      cap: Int): (DataFrame, DataFrame) = {
     // r15 NOTE (r14 VERDICT #7, A/B-REJECTED): persisting the
     // round-invariant frames (edges, nodeF) PRE-PARTITIONED on their
     // join keys — so each round's joins reuse one exchange instead of
@@ -158,9 +174,8 @@ object Graph {
     // r14 kernel-overhead rework (guide §1/§2.4; results bit-identical):
     // the sf0.1 bill was ~13 single-task driver jobs PER ROUND (131 for
     // g01, ~37 ms each — jobs, not data). Removed per round:
-    //  - the 1/N broadcast: N is round-invariant, so it is ONE driver
-    //    count up front and a literal in the update expression — the
-    //    SAME IEEE divisions ((1−d)/n, dang/n) on the same doubles;
+    //  - the 1/N broadcast: round-invariant scalars are driver values
+    //    folded into the callers' expressions as literals;
     //  - the dangling anti-join + per-round `sources.distinct()`
     //    recompute: dangling-ness is round-invariant, so it is a
     //    boolean `dng` column carried ON the rank frame (same addend
@@ -168,51 +183,44 @@ object Graph {
     //    nodes);
     //  - the `cur.select(node)` re-exchange in the update join: the
     //    node set is round-invariant, so the update joins the ONE
-    //    materialized (node, dng) frame instead of re-shuffling cur.
+    //    materialized (node, dng, …) frame instead of re-shuffling cur.
     // Cuts are LAZY (cutLineageLazy): plan truncation without a
     // dedicated materialization job — the next round's stages (or the
     // quant-gate count) materialize the rows anyway.
-    val nodes = nodesIn.cutLineageLazy
-    val n: Double = nodes.count().toDouble
     val sources = edges.select(col("prev_type").as("node")).distinct()
     val nodeF = nodes
       .join(sources.withColumn("is_src", lit(true)), Seq("node"), "left")
-      .select(col("node"), col("is_src").isNull.as("dng"))
+      .select(col("node") +: col("is_src").isNull.as("dng") +:
+        nodes.columns.filter(_ != "node").map(col): _*)
       .cutLineageLazy
-    def prRound(cur: DataFrame): DataFrame = {
-      val contrib = cur.join(edges, cur("node") === edges("prev_type"))
+    val carry = nodeF.columns.map(col)
+    def update(dang: Column): Column =
+      (teleport + lit(Damping) * (coalesce(col("s"), lit(0.0)) + dangShare(dang)))
+        .as("pr")
+    def contrib(cur: DataFrame): DataFrame =
+      cur.join(edges, cur("node") === edges("prev_type"))
         .groupBy(col("next_type").as("node"))
         .agg(sum(col("pr") * col("w")).as("s"))
+    def prRound(cur: DataFrame): DataFrame = {
       val dang = cur.where(col("dng"))
         .agg(coalesce(sum("pr"), lit(0.0)).as("dang"))
       nodeF
-        .join(contrib, Seq("node"), "left")
+        .join(contrib(cur), Seq("node"), "left")
         .crossJoin(broadcast(dang))
-        .select(col("node"), col("dng"),
-          (lit((1.0 - Damping) / n) +
-            lit(Damping) * (coalesce(col("s"), lit(0.0)) + col("dang") / lit(n)))
-            .as("pr"))
+        .select(carry :+ update(col("dang")): _*)
     }
     // gated-phase round (r15): same contrib join and the same update
     // arithmetic as prRound, but (a) the update joins the checkpointed
-    // `cur` itself (identical node/dng set and values as nodeF — cur is
-    // always nodeF's left-join image), carrying cur's pr through as
+    // `cur` itself (identical carried columns and values as nodeF — cur
+    // is always nodeF's left-join image), carrying cur's pr through as
     // prev_pr for the combined gate census, and (b) the dangling mass
-    // arrives as a driver literal (lit(dang)/lit(n) constant-folds to
-    // the identical IEEE division of the identical doubles).
-    def prRoundTracked(cur: DataFrame, dang: Double): DataFrame = {
-      val contrib = cur.join(edges, cur("node") === edges("prev_type"))
-        .groupBy(col("next_type").as("node"))
-        .agg(sum(col("pr") * col("w")).as("s"))
-      cur.select(col("node"), col("dng"), col("pr").as("prev_pr"))
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"), col("dng"), col("prev_pr"),
-          (lit((1.0 - Damping) / n) +
-            lit(Damping) * (coalesce(col("s"), lit(0.0)) + lit(dang) / lit(n)))
-            .as("pr"))
-    }
-    var pr = nodeF.select(col("node"), col("dng"), lit(1.0 / n).as("pr"))
-      .cutLineageLazy
+    // arrives as a driver literal (e.g. lit(dang)/lit(n) constant-folds
+    // to the identical IEEE division of the identical doubles).
+    def prRoundTracked(cur: DataFrame, dang: Double): DataFrame =
+      cur.select(carry :+ col("pr").as("prev_pr"): _*)
+        .join(contrib(cur), Seq("node"), "left")
+        .select(carry :+ col("prev_pr") :+ update(lit(dang)): _*)
+    var pr = nodeF.select(carry :+ start.as("pr"): _*).cutLineageLazy
     var prev = pr
     for (it <- 1 to PrIters) {
       if (it == PrIters) prev = pr
@@ -221,18 +229,24 @@ object Graph {
       // join/agg analyzes fine and halves the per-round planning cost
       if (it % 2 == 0 || it == PrIters) pr = pr.cutLineageLazy
     }
-    val (fin, rounds, changed) = quantGatedRounds(prev, pr, prRoundTracked)
-    val signal = nodesIn.sparkSession.range(1)
+    val (fin, rounds, changed) = quantGatedRounds(prev, pr, prRoundTracked, cap)
+    val spark = nodes.sparkSession
+    val signal = spark.range(1)
       .select(lit(rounds).as("rounds"), lit(changed).as("changed_last_round"))
-    maybeLogConvergence("pagerank", signal, nodesIn.sparkSession)
+    maybeLogConvergence(tag, signal, spark)
     (fin.select(col("node"), col("pr")), signal)
   }
 
   /** Extra power-iteration rounds past the documented budget, gated on
     * the 6-decimal quantized round-over-round diff (stop at zero, cap
-    * [[PrMaxIters]]). Shared by the uniform and personalized kernels —
-    * the round body is the caller's. Returns (final frontier, rounds
-    * run in total, changed count at the last round).
+    * `cap`): before each extra round both engines count the nodes
+    * whose round(pr, 6) moved between the two previous frontiers and
+    * stop on zero. The gate is computed on the 6-decimal OUTPUT
+    * contract, where the engines' ulp-level float drift is already
+    * absorbed, so the oracle can mirror the stop decision layer by
+    * layer (a CASE on the same count) and stay bit-equal at any corpus
+    * size. The round body is [[powerIteration]]'s. Returns (final
+    * frontier, rounds run in total, changed count at the last round).
     *
     * r15 gated-round overhead rework (r14 VERDICT #7, guide §1.2/§2.4;
     * results bit-identical). The r14 shape paid, PER GATED ROUND, a
@@ -257,7 +271,7 @@ object Graph {
   private def quantGatedRounds(
       prev0: DataFrame, cur0: DataFrame,
       roundTracked: (DataFrame, Double) => DataFrame,
-      cap: Int = PrMaxIters): (DataFrame, Int, Long) = {
+      cap: Int): (DataFrame, Int, Long) = {
     def qc(a: DataFrame, b: DataFrame): Long =
       a.select(col("node"), round(col("pr"), 6).as("qa"))
         .join(b.select(col("node"), round(col("pr"), 6).as("qb")), Seq("node"))
@@ -302,23 +316,27 @@ object Graph {
       .withColumn("rank", row_number().over(
         Window.orderBy(col("pr").desc, col("node"))).cast("long"))
 
-  /** [[pagerankScores]] + top-N by (pr desc, node) — the
-    * unbounded-domain rank path: `orderBy(...).limit(n)` plans as
-    * TakeOrderedAndProject (per-partition heap of n rows, merged once
-    * — no global sort, no single-partition shuffle of the node frame;
-    * pinned in PlanSpec), and only the BOUNDED n-row result takes a
-    * final in-memory rank window. pr is rounded to 6 BEFORE the cut so
-    * both the selection and the rank see the same cross-engine-stable
-    * values (the g01 convention).
+  /** [[pagerankScores]] + top-N by (pr desc, node) through
+    * [[topRanked]] — the unbounded-domain rank path.
     */
   private[graft] def pagerankTopN(
-      nodesIn: DataFrame, counts: DataFrame, n: Int): DataFrame = {
-    val top = pagerankScores(nodesIn, counts)
-      .select(col("node"), round(col("pr"), 6).as("pr"))
-      .orderBy(col("pr").desc, col("node")).limit(n)
-    top.withColumn("rank", row_number().over(
-      Window.orderBy(col("pr").desc, col("node"))).cast("long"))
-  }
+      nodesIn: DataFrame, counts: DataFrame, n: Int): DataFrame =
+    topRanked(pagerankScores(nodesIn, counts), "pr", n)
+
+  /** Top-n of a (node, pr) frame by (score desc, node), with its rank:
+    * `orderBy(...).limit(n)` plans as TakeOrderedAndProject
+    * (per-partition heap of n rows, merged once — no global sort, no
+    * single-partition shuffle of the node frame; pinned in PlanSpec),
+    * and only the BOUNDED n-row result takes a final in-memory rank
+    * window. pr is rounded to 6 (as `score`) BEFORE the cut so both the
+    * selection and the rank see the same cross-engine-stable values
+    * (the g01 convention). Shared by g04/s31 and g08/s35.
+    */
+  private def topRanked(scores: DataFrame, score: String, n: Int): DataFrame =
+    scores.select(col("node"), round(col("pr"), 6).as(score))
+      .orderBy(col(score).desc, col("node")).limit(n)
+      .withColumn("rank", row_number().over(
+        Window.orderBy(col(score).desc, col("node"))).cast("long"))
 
   /** Output size of g04's leaderboard. */
   val TopUsers = 20
@@ -399,14 +417,23 @@ object Graph {
     */
   private[graft] def userHandoffLpaInputs(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val directed = userHandoffCounts(spark, dir)
+    val sym = symmetrized(userHandoffCounts(spark, dir)).cutLineageLazy
+    (userNodes(spark, dir).cutLineageLazy, sym)
+  }
+
+  /** The undirected weighted edge frame (a, b, w) of an edge census
+    * (prev_type, next_type, n_trans): w = n(u→v) + n(v→u), self-loops
+    * dropped, exact integers — the LPA kernel's input contract, shared
+    * by g02, g05/g05b, s33 and the convergence census. The lineage is
+    * NOT cut: each caller picks its own lazy or eager cut.
+    */
+  private[graft] def symmetrized(counts: DataFrame): DataFrame = {
+    val directed = counts
       .select(col("prev_type").as("a"), col("next_type").as("b"), col("n_trans"))
-    val sym = directed
+    directed
       .unionByName(directed.select(col("b").as("a"), col("a").as("b"), col("n_trans")))
       .where(col("a") =!= col("b"))
       .groupBy("a", "b").agg(sum("n_trans").as("w"))
-      .cutLineageLazy
-    (userNodes(spark, dir).cutLineageLazy, sym)
   }
 
   /** g05b: DAMPED label propagation over the user handoff graph — the
@@ -482,12 +509,7 @@ object Graph {
     * the edge key, nothing driver-looped.
     */
   def g02LabelPropagation(spark: SparkSession, dir: String): DataFrame = {
-    val directed = graft.queries.Events.q39EventTransitions(spark, dir)
-      .select(col("prev_type").as("a"), col("next_type").as("b"), col("n_trans"))
-    val sym = directed
-      .unionByName(directed.select(col("b").as("a"), col("a").as("b"), col("n_trans")))
-      .where(col("a") =!= col("b"))
-      .groupBy("a", "b").agg(sum("n_trans").as("w"))
+    val sym = symmetrized(graft.queries.Events.q39EventTransitions(spark, dir))
       .cutLineageLazy
     val nodes = Tables.events(spark, dir)
       .select(col("event_type").as("node")).distinct()
@@ -506,33 +528,25 @@ object Graph {
 
   /** [[lpaFrom]] plus its lazy convergence signal.
     *
-    * `spark.graft.graph.lpaDamped=true` adds a SELF-VOTE to every
-    * round: the node's current community participates in the argmax
-    * with weight equal to the node's max incident edge weight. This
-    * is the standard damping for synchronous LPA's period-2
-    * oscillation (Raghavan et al. §3 note the 2-cycle; the r12
-    * convergence probe measured it live: on the sf1 handoff graph ALL
-    * 15 000 labels flip every round under pure sync updates, because
-    * the graph is rich in symmetric pair/bipartite motifs — adjacent
-    * nodes adopt each other's label simultaneously, forever). With
-    * the self-vote, a pure pair resolves to the smaller label in one
-    * round (tie → lexicographic) and a node still migrates whenever a
-    * neighbor community's SUMMED weight beats its strongest single
-    * tie. Default OFF: g02/g05/s33's oracle contract is exactly
-    * [[LpaRounds]] pure synchronous rounds, and both engines run that
-    * to the letter — the knob is the documented 100×-scale posture,
-    * not a silent semantics change.
+    * `damped = true` adds a SELF-VOTE to every round: the node's
+    * current community participates in the argmax with weight equal to
+    * the node's max incident edge weight. This is the standard damping
+    * for synchronous LPA's period-2 oscillation (Raghavan et al. §3
+    * note the 2-cycle; the r12 convergence probe measured it live: on
+    * the sf1 handoff graph ALL 15 000 labels flip every round under
+    * pure sync updates, because the graph is rich in symmetric
+    * pair/bipartite motifs — adjacent nodes adopt each other's label
+    * simultaneously, forever). With the self-vote, a pure pair
+    * resolves to the smaller label in one round (tie → lexicographic)
+    * and a node still migrates whenever a neighbor community's SUMMED
+    * weight beats its strongest single tie. Default OFF: g02/g05/s33's
+    * oracle contract is exactly [[LpaRounds]] pure synchronous rounds;
+    * g05b runs the damped rounds to the fixpoint
+    * ([[lpaConvergedTracked]]).
     */
   private[graft] def lpaFromTracked(
       nodes: DataFrame, sym: DataFrame,
-      rounds: Int = LpaRounds): (DataFrame, DataFrame) =
-    lpaFromTracked(nodes, sym, rounds,
-      nodes.sparkSession.conf
-        .get("spark.graft.graph.lpaDamped", "false").toBoolean)
-
-  private[graft] def lpaFromTracked(
-      nodes: DataFrame, sym: DataFrame,
-      rounds: Int, damped: Boolean): (DataFrame, DataFrame) = {
+      rounds: Int = LpaRounds, damped: Boolean = false): (DataFrame, DataFrame) = {
     val selfW =
       if (damped)
         Some(sym.groupBy(col("a").as("node")).agg(max("w").as("sw")).cutLineageLazy)
@@ -657,10 +671,6 @@ object Graph {
       undirectedEdges(directed))
   }
 
-  /** Symmetrize a directed (a, b) frame into the canonical undirected
-    * edge set (a < b, distinct, no self-loops) — the triangle kernel's
-    * input contract, shared by g03 and g06.
-    */
   /** The per-kernel convergence census over the user handoff graph —
     * SURVEY §17.3's measured truth table as ONE queryable frame
     * (kernel, rounds, changed_last_round), so the fixed-budget
@@ -675,21 +685,12 @@ object Graph {
     val nodes = userNodes(spark, dir).cutLineageLazy
     val counts = userHandoffCounts(spark, dir).cutLineageLazy
     val (_, prSig) = pagerankScoresTracked(nodes, counts)
-    val seeds = counts.groupBy(col("prev_type").as("node"))
-      .agg(sum("n_trans").as("out_n"))
-      .orderBy(col("out_n").desc, col("node")).limit(PprSeeds)
-      .select("node")
-    val (_, pprSig) = pprScoresTracked(nodes, counts, seeds)
-    val directed = counts.select(col("prev_type").as("a"),
-      col("next_type").as("b"), col("n_trans"))
-    val sym = directed
-      .unionByName(directed.select(col("b").as("a"), col("a").as("b"), col("n_trans")))
-      .where(col("a") =!= col("b"))
-      .groupBy("a", "b").agg(sum("n_trans").as("w")).cutLineageLazy
-    val (_, lpaSig) = lpaFromTracked(nodes, sym, LpaRounds, damped = false)
+    val (_, pprSig) = pprScoresTracked(nodes, counts, pprSeeds(counts))
+    val sym = symmetrized(counts).cutLineageLazy
+    val (_, lpaSig) = lpaFromTracked(nodes, sym)
     val (_, lpaDSig) = lpaConvergedTracked(nodes, sym)
-    val (_, kcSig) = kcoreCensusTracked(nodes,
-      undirectedEdges(directed.select("a", "b")))
+    val (_, kcSig) = kcoreCensusTracked(nodes, undirectedEdges(
+      counts.select(col("prev_type").as("a"), col("next_type").as("b"))))
     Seq("pagerank" -> prSig, "ppr" -> pprSig, "lpa" -> lpaSig,
         "lpa_damped" -> lpaDSig, "kcore" -> kcSig)
       .map { case (t, s) =>
@@ -699,6 +700,10 @@ object Graph {
       .reduce(_ unionByName _)
   }
 
+  /** Symmetrize a directed (a, b) frame into the canonical undirected
+    * edge set (a < b, distinct, no self-loops) — the triangle kernel's
+    * input contract, shared by g03 and g06.
+    */
   private[graft] def undirectedEdges(directed: DataFrame): DataFrame =
     directed
       .unionByName(directed.select(col("b").as("a"), col("a").as("b")))
@@ -783,107 +788,45 @@ object Graph {
     * paths stay bit-identical.
     */
   private[graft] def pprFromCounts(
-      nodes: DataFrame, counts: DataFrame): DataFrame = {
-    val seeds = counts
+      nodes: DataFrame, counts: DataFrame): DataFrame =
+    topRanked(pprScores(nodes, counts, pprSeeds(counts)), "ppr", TopUsers)
+
+  /** g08's seed set: the top-[[PprSeeds]] sources by total out-count
+    * (ties to the smaller node), as a bounded top-N merge.
+    */
+  private def pprSeeds(counts: DataFrame): DataFrame =
+    counts
       .groupBy(col("prev_type").as("node"))
       .agg(sum("n_trans").as("out_n"))
       .orderBy(col("out_n").desc, col("node")).limit(PprSeeds)
       .select("node")
-    val top = pprScores(nodes, counts, seeds)
-      .select(col("node"), round(col("pr"), 6).as("ppr"))
-      .orderBy(col("ppr").desc, col("node")).limit(TopUsers)
-    top.withColumn("rank", row_number().over(
-      Window.orderBy(col("ppr").desc, col("node"))).cast("long"))
-  }
 
-  /** The personalized power-iteration kernel: [[pagerankScores]] with
+  /** The personalized power-iteration kernel: [[powerIteration]] with
     * the uniform teleport replaced by a seed-set distribution t(v)
     * (1/|S| on seeds, 0 elsewhere), pr₀ = t, and per round
-    * `pr'(v) = (1−d)·t(v) + d·(Σ_{u→v} pr(u)·w(u,v) + dang·t(v))`.
-    * Kept as a SEPARATE kernel rather than a parameter of
-    * [[pagerankScores]]: the uniform path computes `(1−d)/n`, and
-    * rewriting it as `(1−d)·(1/n)` is a different floating-point
-    * expression — sharing would silently move g01/g04's 6-decimal
-    * pins.
+    * `pr'(v) = (1−d)·t(v) + d·(Σ_{u→v} pr(u)·w(u,v) + dang·t(v))`
+    * (Page et al. 1999 §6: PageRank with a non-uniform teleport).
     */
   private[graft] def pprScores(
       nodesIn: DataFrame, counts: DataFrame, seedsIn: DataFrame): DataFrame =
     pprScoresTracked(nodesIn, counts, seedsIn)._1
 
-  /** [[pprScores]] plus its lazy convergence signal. */
+  /** [[pprScores]] plus its convergence signal. The seed count is a
+    * ONE-off driver scalar; the sf1 census measured 91 personalized
+    * ranks still moving at the documented budget, so PPR gates up to
+    * its own cap, [[PprMaxIters]].
+    */
   private[graft] def pprScoresTracked(
       nodesIn: DataFrame, counts: DataFrame,
       seedsIn: DataFrame): (DataFrame, DataFrame) = {
-    val edges = counts
-      .select(col("prev_type"), col("next_type"),
-        (col("n_trans").cast("double") /
-          sum(col("n_trans")).over(Window.partitionBy(col("prev_type"))))
-          .as("w"))
-      .cutLineageLazy
     val seeds = seedsIn.cutLineageLazy
-    // r14 kernel-overhead rework — same moves as the uniform kernel
-    // (pagerankScoresTracked), results bit-identical: seed count is a
-    // ONE-off driver scalar (same 1/ns division), dangling-ness is a
-    // carried `dng` column (same dang addend set, no per-round
-    // anti-join or sources recompute), cuts are lazy.
     val ns: Double = seeds.count().toDouble
-    val sources = edges.select(col("prev_type").as("node")).distinct()
     val tele = nodesIn.cutLineageLazy
       .join(seeds.withColumn("is_seed", lit(1)), Seq("node"), "left")
-      .join(sources.withColumn("is_src", lit(true)), Seq("node"), "left")
       .select(col("node"),
-        when(col("is_seed").isNotNull, lit(1.0 / ns))
-          .otherwise(lit(0.0)).as("t"),
-        col("is_src").isNull.as("dng"))
-      .cutLineageLazy
-    // r15: the rank frame carries the teleport column `t` through every
-    // round (plan-only change — same values tele would re-join) so the
-    // gated-phase round can read the checkpointed frontier alone.
-    def prRound(cur: DataFrame): DataFrame = {
-      val contrib = cur.join(edges, cur("node") === edges("prev_type"))
-        .groupBy(col("next_type").as("node"))
-        .agg(sum(col("pr") * col("w")).as("s"))
-      val dang = cur.where(col("dng"))
-        .agg(coalesce(sum("pr"), lit(0.0)).as("dang"))
-      tele
-        .join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"), col("dng"), col("t"),
-          (lit(1.0 - Damping) * col("t") +
-            lit(Damping) * (coalesce(col("s"), lit(0.0)) + col("dang") * col("t")))
-            .as("pr"))
-    }
-    // gated-phase round (r15, see quantGatedRounds): update joins the
-    // checkpointed `cur` (same node/dng/t values tele carries), prev pr
-    // rides as prev_pr, dangling mass arrives as a driver literal
-    // (lit(dang) * t — the identical multiply the broadcast column fed).
-    def prRoundTracked(cur: DataFrame, dang: Double): DataFrame = {
-      val contrib = cur.join(edges, cur("node") === edges("prev_type"))
-        .groupBy(col("next_type").as("node"))
-        .agg(sum(col("pr") * col("w")).as("s"))
-      cur.select(col("node"), col("dng"), col("t"), col("pr").as("prev_pr"))
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"), col("dng"), col("t"), col("prev_pr"),
-          (lit(1.0 - Damping) * col("t") +
-            lit(Damping) * (coalesce(col("s"), lit(0.0)) + lit(dang) * col("t")))
-            .as("pr"))
-    }
-    var pr = tele.select(col("node"), col("dng"), col("t"), col("t").as("pr"))
-    var prev = pr
-    for (it <- 1 to PrIters) {
-      if (it == PrIters) prev = pr
-      pr = prRound(pr)
-      if (it % 2 == 0 || it == PrIters) pr = pr.cutLineageLazy
-    }
-    // same quant-gated extension as the uniform kernel (the sf1
-    // census measured 91 personalized ranks still moving at the
-    // documented budget)
-    val (fin, rounds, changed) =
-      quantGatedRounds(prev, pr, prRoundTracked, PprMaxIters)
-    val signal = nodesIn.sparkSession.range(1)
-      .select(lit(rounds).as("rounds"), lit(changed).as("changed_last_round"))
-    maybeLogConvergence("ppr", signal, nodesIn.sparkSession)
-    (fin.select(col("node"), col("pr")), signal)
+        when(col("is_seed").isNotNull, lit(1.0 / ns)).otherwise(lit(0.0)).as("t"))
+    powerIteration("ppr", tele, counts, col("t"),
+      lit(1.0 - Damping) * col("t"), _ * col("t"), PprMaxIters)
   }
 
   /** g09's core order: nodes must keep ≥ K surviving neighbors. */

@@ -1,6 +1,8 @@
 package graft.ml
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.linalg.{DenseVector, Vector, Vectors}
+import org.apache.spark.rdd.RDD
 
 /** One query batch of the exact brute-force kNN scan shared by the
   * RELIEF fit and relief_knn. Broadcast it once per batch; every task
@@ -54,6 +56,24 @@ final class KnnBatch(val ids: Array[Long], val vectors: Array[Vector]) extends S
 }
 
 object KnnBatch {
+  /** The distributed kNN job over one broadcast batch: every partition
+    * offers its (id, vector, group) rows to one [[Scanner]], and the
+    * per-query heaps merge with `reduceByKey` (map-side combine — the
+    * shuffle is O(#queries × k), never O(rows)). Returns each query
+    * index with its heaps in group order.
+    */
+  def neighbors(rows: RDD[(Long, Vector, Int)], batch: Broadcast[KnnBatch],
+      nGroups: Int, k: Int): Array[(Int, Array[TopK])] =
+    rows.mapPartitions { it =>
+      val knn = batch.value.scanner(nGroups, k)
+      it.foreach { case (id, v, g) => knn.add(id, v, g) }
+      Iterator.tabulate(batch.value.size)(j => (j, knn.heapsOf(j)))
+    }.reduceByKey { (a, b) =>
+      var g = 0
+      while (g < a.length) { a(g).merge(b(g)); g += 1 }
+      a
+    }.collect()
+
   private def widthMismatch(dq: Int, dx: Int): String =
     s"Vector dimensions do not match: Dim(query)=$dq and Dim(row)=$dx."
 

@@ -96,14 +96,6 @@ trait ReliefFRParams extends Params {
     "treat features as discrete")
   setDefault(discreteData -> false)
 
-  /** Force feature-keyed (sparse) weight accumulation. Auto-enabled
-    * above [[ReliefFRSelector.DenseFeatureLimit]] features; set
-    * explicitly for ultra-sparse data below that.
-    */
-  final val highDimMode = new BooleanParam(this, "highDimMode",
-    "feature-keyed sparse accumulation for very high-dimensional data")
-  setDefault(highDimMode -> false)
-
   def getSelectionSize: Int = $(numTopFeatures)
 }
 
@@ -154,9 +146,13 @@ trait ReliefFRParams extends Params {
   * never shuffled (only fixed-size digests move); broadcast per batch
   * is batchRows × vectorSize, and each executor builds one more copy of
   * a dense batch, feature-major (≤ maxQueryRowsPerBatch × vectorSize
-  * doubles); the joint matrix is
-  * O(lowerFeat × nFeat) doubles per task — for very high-dimensional
-  * sparse data, raise batch count and lower lowerFeatureThreshold.
+  * doubles); the weight pass holds nFeat × (2·nClasses + lowerFeat + 1)
+  * doubles per task (relevance, the lowerFeat × nFeat joint matrix,
+  * marginals) while that fits [[ReliefFRSelector.DenseBudgetDoubles]]
+  * (2^20 × 35), and feature-keyed maps bounded by the touched features
+  * above it — so very high-dimensional sparse data never allocates
+  * O(nFeat) arrays; lowering lowerFeatureThreshold keeps a wider input
+  * in the faster dense layout.
   * Every job the fit runs carries the description
   * "graft relief: <phase>": one setup job (row count, label counts and
   * vector width in one pass), then one sample, one kNN and one weights
@@ -181,7 +177,6 @@ final class ReliefFRSelector(override val uid: String)
   def setLowerDistanceThreshold(v: Double): this.type = set(lowerDistanceThreshold, v)
   def setRedundancyRemoval(v: Boolean): this.type = set(redundancyRemoval, v)
   def setDiscreteData(v: Boolean): this.type = set(discreteData, v)
-  def setHighDimMode(v: Boolean): this.type = set(highDimMode, v)
 
   override def transformSchema(schema: StructType): StructType = {
     require(schema($(labelCol)).dataType == DoubleType,
@@ -258,9 +253,9 @@ final class ReliefFRSelector(override val uid: String)
       }
     }
 
-    // dense accumulators below the high-dim threshold; feature-keyed
-    // maps above it (memory scales with touched features, not nFeat)
-    val dense = !$(highDimMode) && nFeat <= ReliefFRSelector.DenseFeatureLimit
+    // dense accumulators when they fit the budget; feature-keyed maps
+    // otherwise (memory scales with touched features, not nFeat)
+    val dense = ReliefFRSelector.denseLayout(nFeat, nClasses, lowerFeat)
     val totalRelevance = scala.collection.mutable.LongMap.empty[Double]
     val marginal = scala.collection.mutable.LongMap.empty[Double]
     // symmetric joint collision mass, keyed min*nFeat+max
@@ -285,16 +280,9 @@ final class ReliefFRSelector(override val uid: String)
         // groups entirely; per-class heaps implement the documented
         // semantics.
         val kPerClass = $(numNeighbors)
-        val neighborSets: Array[(Int, Array[TopK])] = ReliefFRSelector.phase(sc, s"knn $of") {
-          data.mapPartitions { it =>
-            val knn = bQueries.value.scanner(nClasses, kPerClass)
-            it.foreach { case (id, v, l) => knn.add(id, v, labelIdx(l)) }
-            Iterator.tabulate(bQueries.value.size)(j => (j, knn.heapsOf(j)))
-          }.reduceByKey { (a, b) =>
-            var c = 0
-            while (c < a.length) { a(c).merge(b(c)); c += 1 }
-            a
-          }.collect()
+        val neighborSets = ReliefFRSelector.phase(sc, s"knn $of") {
+          KnnBatch.neighbors(data.map { case (id, v, l) => (id, v, labelIdx(l)) },
+            bQueries, nClasses, kPerClass)
         }
 
         // invert: rowId -> query indices it serves (buffer-backed build:
@@ -471,11 +459,21 @@ final class ReliefFRSelector(override val uid: String)
 }
 
 object ReliefFRSelector extends MLReadable[ReliefFRSelector] {
-  /** Above this many features the weight pass switches to feature-keyed
-    * sparse accumulation automatically (dense arrays would cost
-    * nFeat × 2·nClasses doubles per task).
+  /** Doubles per task the weight pass may spend on its dense layout:
+    * 2^20 features × 35, what 2^20 features cost with the default
+    * params on 2 classes (2·2 relevance groups, 30 joint rows, one
+    * marginal).
     */
-  val DenseFeatureLimit: Int = 1 << 20
+  val DenseBudgetDoubles: Long = (1L << 20) * 35
+
+  /** The weight pass's layout, from the fit's shape: dense arrays when
+    * their nFeat × (2·nClasses + lowerFeat + 1) doubles per task (the
+    * relevance groups, the lowerFeat × nFeat joint matrix and the
+    * marginals) fit [[DenseBudgetDoubles]]; feature-keyed maps, which
+    * grow with the touched features instead, otherwise.
+    */
+  private[ml] def denseLayout(nFeat: Int, nClasses: Int, lowerFeat: Int): Boolean =
+    nFeat.toLong * (2L * nClasses + lowerFeat + 1) <= DenseBudgetDoubles
 
   /** The local property behind `SparkContext.setJobDescription`. */
   private val JobDescription = "spark.job.description"
@@ -528,10 +526,11 @@ object ReliefFRSelector extends MLReadable[ReliefFRSelector] {
 /** Accumulator for the RELIEF weight pass (one per task via
   * treeAggregate). Two storage modes behind one interface:
   *
-  *  - dense (default): flat primitive arrays —
+  *  - dense (while [[ReliefFRSelector.denseLayout]] admits the fit's
+  *    shape): flat primitive arrays —
   *    relevance [feature × (2·nClasses)], marginal [feature],
   *    joint [topFeatureSlot × feature]. Fastest, O(nFeat) memory.
-  *  - sparse (high-dim mode): open-addressing LongMaps keyed by
+  *  - sparse (above the dense budget): open-addressing LongMaps keyed by
   *    feature — memory scales with the features actually touched, not
   *    nFeat, which is what makes kddb-scale (tens of millions of
   *    features, reference README) inputs feasible. Never-active

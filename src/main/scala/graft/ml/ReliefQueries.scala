@@ -170,18 +170,13 @@ object ReliefQueries {
   private[ml] def reliefKnnOn(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val data = df.select("vec_id", "features").rdd
-      .map { case Row(id: Long, v: Vector) => (id, v) }
-    val queries: Array[(Long, Vector)] = data.filter(_._1 < 5).collect().sortBy(_._1)
+      .map { case Row(id: Long, v: Vector) => (id, v, 0) }
+    val queries = data.filter(_._1 < 5).collect().sortBy(_._1)
     val bQ = spark.sparkContext.broadcast(new KnnBatch(queries.map(_._1), queries.map(_._2)))
-    val k = 10
-    val topk = data.mapPartitions { it =>
-      val knn = bQ.value.scanner(1, k)
-      it.foreach { case (id, v) => knn.add(id, v, 0) }
-      Iterator.tabulate(bQ.value.size)(j => (j, knn.heaps(0)(j)))
-    }.reduceByKey(_.merge(_)).collect()
+    val topk = KnnBatch.neighbors(data, bQ, nGroups = 1, k = 10)
     import spark.implicits._
-    topk.flatMap { case (qIdx, heap) =>
-      heap.sorted.map { case (d, id) => (queries(qIdx)._1, id, d) }
+    topk.flatMap { case (qIdx, heaps) =>
+      heaps(0).sorted.map { case (d, id) => (queries(qIdx)._1, id, d) }
     }.toSeq.toDF("query_id", "neighbor_id", "dist")
   }
 

@@ -760,13 +760,7 @@ object Streams {
 
   private[graft] def runUserCommunities(events: DataFrame): DataFrame = {
     val ann = streamedHandoffs(events)
-    val directed = handoffCountsOf(ann)
-      .select(col("prev_type").as("a"), col("next_type").as("b"), col("n_trans"))
-    val sym = directed
-      .unionByName(directed.select(col("b").as("a"), col("a").as("b"), col("n_trans")))
-      .where(col("a") =!= col("b"))
-      .groupBy("a", "b").agg(sum("n_trans").as("w"))
-      .cutLineage
+    val sym = graft.graph.Graph.symmetrized(handoffCountsOf(ann)).cutLineage
     graft.graph.Graph.lpaFrom(
       ann.select(col("user_id").as("node")).distinct().cutLineage, sym)
   }

@@ -177,8 +177,17 @@ class ReliefSpec extends SparkSpec {
     assert(m.redundancySelection.nonEmpty)
   }
 
-  test("highDimMode (sparse accumulation) selects identically to dense mode") {
+  test("dense and sparse weight-pass layouts select identically") {
+    // the weight pass picks its layout from the fit's shape: the same
+    // sparse rows at width 16 fit the dense budget, at a width whose
+    // nFeat × (2·nClasses + lowerFeat + 1) doubles exceed it they take
+    // the feature-keyed sparse layout; both must agree
     import spark.implicits._
+    val nTop = 3
+    val perFeature = 2 * 2 + 3 * nTop + 1 // 2 classes, lowerFeat = 3 × numTopFeatures
+    val wide = (ReliefFRSelector.DenseBudgetDoubles / perFeature + 1).toInt
+    assert(ReliefFRSelector.denseLayout(16, 2, 3 * nTop))
+    assert(!ReliefFRSelector.denseLayout(wide, 2, 3 * nTop))
     val rnd = new scala.util.Random(23)
     val rows = (0 until 300).map { i =>
       val label = (i % 2).toDouble
@@ -186,24 +195,24 @@ class ReliefSpec extends SparkSpec {
         2 -> ((if (label == 0.0) -1.0 else 1.0) + rnd.nextGaussian() * 0.1))
       if (rnd.nextDouble() < 0.4) active += 7 -> rnd.nextDouble()
       if (rnd.nextDouble() < 0.4) active += 11 -> rnd.nextDouble()
-      (label, Vectors.sparse(16, active.sortBy(_._1).toSeq))
+      (label, active.sortBy(_._1).toSeq)
     }
-    val df = rows.toDF("label", "features")
-    def fitWith(hd: Boolean) = new ReliefFRSelector()
+    def fitAt(width: Int) = new ReliefFRSelector()
       .setInputCol("features").setLabelCol("label").setOutputCol("out")
-      .setNumTopFeatures(3).setNumNeighbors(5)
+      .setNumTopFeatures(nTop).setNumNeighbors(5)
       .setEstimationRatio(0.5).setBatchSize(0.5)
-      .setRedundancyRemoval(true).setHighDimMode(hd).setSeed(5L)
-      .fit(df)
-    val dense = fitWith(false)
-    val sparse = fitWith(true)
+      .setRedundancyRemoval(true).setSeed(5L)
+      .fit(rows.map { case (l, a) => (l, Vectors.sparse(width, a)) }.toDF("label", "features"))
+    val dense = fitAt(16)
+    val sparse = fitAt(wide)
     assert(dense.stdSelection.toSeq == sparse.stdSelection.toSeq)
     assert(dense.redundancySelection.toSeq == sparse.redundancySelection.toSeq)
     assert(dense.stdSelection.head == 2)
-    // weights agree on every touched feature
-    val diffs = dense.featureWeights.zip(sparse.featureWeights)
+    assert(dense.weightedFeatures.toSeq == sparse.weightedFeatures.toSeq)
+    val diffs = dense.weightedValues.zip(sparse.weightedValues)
       .filter { case (a, b) => math.abs(a - b) > 1e-12 }
-    assert(diffs.isEmpty, s"weights diverge: $diffs")
+    assert(diffs.isEmpty, s"weights diverge: ${diffs.toSeq}")
+    assert(dense.defaultWeight == sparse.defaultWeight)
   }
 
   test("hit/miss weight math matches a hand computation exactly") {
@@ -385,7 +394,7 @@ class ReliefSpec extends SparkSpec {
     // the reference README's one scale claim not yet matched by a pin
     // (README.md:19 — kddb, "20M instances, nearly 30M of features"):
     // a 30M-dimension sparse corpus through the reference's libsvm
-    // entry point, fit under highDimMode with a pinned absolute query
+    // entry point, fit in the sparse layout with a pinned absolute query
     // budget. The runtime-shape contract: NOTHING in the fit or the
     // model materializes an O(nFeat) frame — accumulators are
     // feature-keyed maps, the model stores (active dim, weight) pairs
@@ -434,7 +443,7 @@ class ReliefSpec extends SparkSpec {
         .setInputCol("features").setLabelCol("label").setOutputCol("out")
         .setNumTopFeatures(10).setNumNeighbors(3)
         .setEstimationRatio(200.0 / nRows) // pinned absolute budget: ~200 queries
-        .setBatchSize(1.0).setHighDimMode(true).setSeed(123456789L)
+        .setBatchSize(1.0).setSeed(123456789L)
         .fit(df)
       val fitSec = (System.nanoTime() - t0) / 1e9
       assert(m.numFeatures == nFeat)
@@ -637,6 +646,19 @@ class ReliefSpec extends SparkSpec {
     // an estimator's save is not a model
     val e = intercept[IllegalArgumentException](ReliefFRSelectorModel.load(s"$dir/est"))
     assert(e.getMessage.contains("ReliefFRSelector,"), e.getMessage)
+    // a file carrying a param the estimator no longer has still loads,
+    // with every other param intact
+    val removed = "highDimMode"
+    val estFile = java.nio.file.Paths.get(dir, "est", "graft_model.json")
+    val estJson = new String(java.nio.file.Files.readAllBytes(estFile), "UTF-8")
+    assert(estJson.contains("\"params\":{"), estJson)
+    val oldDir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "est_old"))
+    java.nio.file.Files.write(oldDir.resolve("graft_model.json"), estJson
+      .replace("\"params\":{", s"\"params\":{\"$removed\":\"true\",").getBytes("UTF-8"))
+    val estOld = ReliefFRSelector.load(oldDir.toString)
+    assert(!estOld.hasParam(removed))
+    assert(estOld.extractParamMap().toSeq.map(p => p.param.name -> p.value).toMap ==
+      est.extractParamMap().toSeq.map(p => p.param.name -> p.value).toMap)
     FileUtils.deleteDirectory(new java.io.File(dir))
   }
 

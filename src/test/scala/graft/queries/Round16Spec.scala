@@ -67,6 +67,26 @@ class Round16Spec extends SparkSpec {
       s"heavy-cycle mass ppr=$heavyPpr uniform=$heavyUni")
   }
 
+  test("ppr seeded with every node equals pagerank node for node") {
+    // one power-iteration kernel under both operators: with a uniform
+    // seed set the personalized teleport and dangling share are the
+    // uniform ones, written as other IEEE expressions ((1−d)·(1/n) vs
+    // (1−d)/n, dang·(1/n) vs dang/n), so the ranks agree to ulps.
+    // Node 6 is dangling, node 7 is isolated.
+    val counts = Seq((1L, 2L, 3L), (1L, 3L, 1L), (2L, 3L, 2L), (3L, 1L, 5L),
+        (3L, 6L, 1L), (4L, 1L, 1L), (4L, 5L, 2L), (5L, 4L, 1L))
+      .toDF("prev_type", "next_type", "n_trans")
+    val nodes = (1L to 7L).toDF("node")
+    val ppr = graft.graph.Graph.pprScores(nodes, counts, nodes)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    val uni = graft.graph.Graph.pagerankScores(nodes, counts)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    assert(ppr.keySet == (1L to 7L).toSet && uni.keySet == ppr.keySet)
+    ppr.foreach { case (v, p) =>
+      assert(math.abs(p - uni(v)) <= 1e-12, s"node $v: ppr=$p pagerank=${uni(v)}")
+    }
+  }
+
   // ---------------------------------------------------- g09 k-core
 
   test("g09 kcore: peel reaches a fixpoint within the pinned round budget") {

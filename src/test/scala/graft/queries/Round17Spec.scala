@@ -230,14 +230,7 @@ class Round17Spec extends SparkSpec {
     val (_, vanillaSig) = g.lpaFromTracked(nodes, sym)
     assert(changed(vanillaSig) == 4L,
       "pure sync LPA must oscillate on pairs — and the probe must report it")
-    val s = spark.newSession()
-    s.conf.set("spark.graft.graph.lpaDamped", "true")
-    val edgesD = s.createDataFrame(Seq((1L, 2L, 10L), (3L, 4L, 7L)))
-      .toDF("a", "b", "w")
-    val symD = edgesD.unionByName(edgesD.select(col("b").as("a"),
-      col("a").as("b"), col("w")))
-    val nodesD = s.createDataFrame((1L to 4L).map(Tuple1(_))).toDF("node")
-    val (lblD, dampedSig) = g.lpaFromTracked(nodesD, symD)
+    val (lblD, dampedSig) = g.lpaFromTracked(nodes, sym, damped = true)
     assert(changed(dampedSig) == 0L, "damped LPA must reach the fixpoint")
     val got = lblD.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L),
