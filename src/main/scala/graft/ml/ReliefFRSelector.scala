@@ -121,12 +121,15 @@ trait ReliefFRParams extends Params {
   *    per-pair loop; sparse rows, and batches holding a sparse query,
   *    keep `Vectors.sqdist`.
   *  - The weight pass inverts the neighbor map (rowId → queries it
-  *    serves) and `treeAggregate`s flat primitive arrays: per-feature
+  *    serves); each task accumulates flat primitive arrays in
+  *    `mapPartitions` and `treeReduce` merges them: per-feature
   *    per-(class,hit/miss) relevance sums, collision marginals, and a
-  *    (topFeature × feature) joint-collision matrix. No Spark
-  *    accumulators (the reference's accumulator-based marginals,
+  *    (topFeature × feature) joint-collision matrix, which discrete
+  *    data fills by popcounts over per-feature bitsets of the task's
+  *    pairs (see [[ReliefAcc]]). No Spark accumulators (the
+  *    reference's accumulator-based marginals,
   *    ReliefFRSelector.scala:392-394, can double-count under task
-  *    retry; treeAggregate is exactly-once) and no driver-side
+  *    retry; a job's results are exactly-once) and no driver-side
   *    per-partition tables.
   *  - The collision threshold randomness is a pure hash of
   *    (seed, queryId, rowId) — deterministic and partition-independent.
@@ -142,17 +145,20 @@ trait ReliefFRParams extends Params {
   *    (ReliefFRSelector.scala:419-420, 449-456);
   *  - relevance/marginal/joint accumulate in Double, not Float.
   *
-  * Scale notes (100 TB): the data is scanned 2×#batches times and
-  * never shuffled (only fixed-size digests move); broadcast per batch
+  * Scale notes (100 TB): the data is scanned 1 + 3·#batches times
+  * (setup, then per batch the sample, kNN and weight jobs) and never
+  * shuffled (only fixed-size digests move); broadcast per batch
   * is batchRows × vectorSize, and each executor builds one more copy of
   * a dense batch, feature-major (≤ maxQueryRowsPerBatch × vectorSize
   * doubles); the weight pass holds nFeat × (2·nClasses + lowerFeat + 1)
   * doubles per task (relevance, the lowerFeat × nFeat joint matrix,
   * marginals) while that fits [[ReliefFRSelector.DenseBudgetDoubles]]
-  * (2^20 × 35), and feature-keyed maps bounded by the touched features
-  * above it — so very high-dimensional sparse data never allocates
-  * O(nFeat) arrays; lowering lowerFeatureThreshold keeps a wider input
-  * in the faster dense layout.
+  * (2^20 × 35), plus on discrete data nFeat × min(64, lowerFeat) longs
+  * of chunk bitsets (never more than the joint matrix), and
+  * feature-keyed maps bounded by the touched features above it — so
+  * very high-dimensional sparse data never allocates O(nFeat) arrays;
+  * lowering lowerFeatureThreshold keeps a wider input in the faster
+  * dense layout.
   * Every job the fit runs carries the description
   * "graft relief: <phase>": one setup job (row count, label counts and
   * vector width in one pass), then one sample, one kNN and one weights
@@ -257,9 +263,12 @@ final class ReliefFRSelector(override val uid: String)
     // otherwise (memory scales with touched features, not nFeat)
     val dense = ReliefFRSelector.denseLayout(nFeat, nClasses, lowerFeat)
     val totalRelevance = scala.collection.mutable.LongMap.empty[Double]
-    val marginal = scala.collection.mutable.LongMap.empty[Double]
+    // marginals: an nFeat array in the dense layout, touched features only otherwise
+    val margArr = if (dense) new Array[Double](nFeat) else null
+    val margMap = scala.collection.mutable.LongMap.empty[Double]
+    val margOf: Int => Double = if (dense) margArr(_) else margMap.getOrElse(_, 0.0)
     // symmetric joint collision mass, keyed min*nFeat+max
-    val joint = new java.util.HashMap[Long, Double]()
+    val joint = new JointTable
     var totalInteractions = 0.0
     var topFeatures: Array[Int] = Array.empty
 
@@ -309,33 +318,28 @@ final class ReliefFRSelector(override val uid: String)
         val lSeed = $(seed); val lCont = !$(discreteData)
         val lDistTh = $(lowerDistanceThreshold)
         val acc = ReliefFRSelector.phase(sc, s"weights $of") {
-          data.treeAggregate(
-            new ReliefAcc(nFeat, nClasses, dense))(
-            seqOp = (a, row) => {
-              a.init(bTopF.value)
-              val qIdxs = bNbrOf.value.get(row._1)
-              if (qIdxs != null) {
-                val qs = bQueries.value
-                qIdxs.foreach { qi =>
-                  a.addPair(qs.ids(qi), qs.vectors(qi), qLabels(qi), row._1, row._2, row._3,
-                    labelIdx, lSeed, lCont, lDistTh)
-                }
+          data.mapPartitions { rows =>
+            val a = new ReliefAcc(nFeat, nClasses, dense, lCont, bTopF.value)
+            val nbrOf = bNbrOf.value; val qs = bQueries.value
+            rows.foreach { case (id, v, l) =>
+              val qIdxs = nbrOf.get(id)
+              if (qIdxs != null) qIdxs.foreach { qi =>
+                a.addPair(qs.ids(qi), qs.vectors(qi), qLabels(qi), id, v, l, labelIdx, lSeed, lDistTh)
               }
-              a
-            },
-            combOp = (a1, a2) => a1.mergeWith(a2))
+            }
+            a.flush()
+            Iterator.single(a)
+          }.treeReduce(_.mergeWith(_))
         }
 
         // fold batch results into the running totals
         acc.foreachBatchRelevance(priors, classes) { (f, w) =>
           totalRelevance.update(f, totalRelevance.getOrElse(f, 0.0) + w)
         }
-        acc.foreachMarginal { (f, v) =>
-          marginal.update(f, marginal.getOrElse(f, 0.0) + v)
-        }
+        if (dense) acc.foreachMarginal((f, v) => margArr(f) += v)
+        else acc.foreachMarginal((f, v) => margMap.update(f, margMap.getOrElse(f, 0.0) + v))
         acc.foreachJoint { (i, j, v) =>
-          val key = math.min(i, j).toLong * nFeat + math.max(i, j)
-          joint.merge(key, v, (x, y) => x + y)
+          joint.add(math.min(i, j).toLong * nFeat + math.max(i, j), v)
         }
         totalInteractions += acc.classCounterSum
 
@@ -375,27 +379,26 @@ final class ReliefFRSelector(override val uid: String)
     // (reference ReliefFRSelector.scala:631-679)
     val totalI = math.max(totalInteractions, 1.0)
     val jointTotal = totalI * (1.0 - $(estimationRatio) * (1.0 / nBatches))
-    val log2 = (x: Double) => math.log(x) / math.log(2)
-    val redRaw = new java.util.HashMap[Long, Double]()
-    joint.forEach { (key, v) =>
-      val i = key / nFeat; val j = key % nFeat
-      val jprob = v / jointTotal
-      val mi = marginal.getOrElse(i, 0.0) / totalI
-      val mj = marginal.getOrElse(j, 0.0) / totalI
-      val r = jprob * log2(jprob / (mi * mj))
-      redRaw.put(key, if (r.isNaN || r.isInfinite) 0.0 else r)
-    }
+    val ln2 = math.log(2)
     var maxRed = Double.NegativeInfinity; var minRed = Double.PositiveInfinity
-    redRaw.forEach { (_, v) => { if (v > maxRed) maxRed = v; if (v < minRed) minRed = v } }
+    // the joint table becomes the redundancy table, value by value
+    joint.mapValuesInPlace { (key, v) =>
+      val jprob = v / jointTotal
+      val mi = margOf((key / nFeat).toInt) / totalI
+      val mj = margOf((key % nFeat).toInt) / totalI
+      val r = jprob * (math.log(jprob / (mi * mj)) / ln2)
+      val red = if (r.isNaN || r.isInfinite) 0.0 else r
+      if (red > maxRed) maxRed = red; if (red < minRed) minRed = red
+      red
+    }
     val redSpan = if (maxRed > minRed) maxRed - minRed else 1.0
-    val redundancy = new java.util.HashMap[Long, Double]()
-    redRaw.forEach { (key, v) => redundancy.put(key, (v - minRed) / redSpan) }
+    joint.mapValuesInPlace((_, v) => (v - minRed) / redSpan)
 
     // ---- selection ----
     val order = candFeats.indices.toArray
       .sortBy(i => (-candNorm(i), candFeats(i)))
     val stdSelection = order.take($(numTopFeatures)).map(candFeats(_))
-    val redSelection = greedySelect(candFeats, candNorm, order, redundancy, nFeat)
+    val redSelection = greedySelect(candFeats, candNorm, order, joint, nFeat)
 
     // Sparse model weights: candFeats is already ascending, candNorm
     // aligned — the model (and its persistence) is bounded by ACTIVE
@@ -414,7 +417,7 @@ final class ReliefFRSelector(override val uid: String)
       candFeats: Array[Int],
       candNorm: Array[Double],
       order: Array[Int],
-      redundancy: java.util.HashMap[Long, Double],
+      redundancy: JointTable,
       nFeat: Int): Array[Int] = {
     val n = candFeats.length
     val nSel = math.min($(numTopFeatures), n)
@@ -432,7 +435,7 @@ final class ReliefFRSelector(override val uid: String)
         if (!taken(i)) {
           val f = candFeats(i)
           val key = math.min(last, f).toLong * nFeat + math.max(last, f)
-          redAcc(i) += redundancy.getOrDefault(key, 0.0)
+          redAcc(i) += redundancy(key)
         }
         i += 1
       }
@@ -523,58 +526,78 @@ object ReliefFRSelector extends MLReadable[ReliefFRSelector] {
     new GraftParamsReader[ReliefFRSelector](uid => new ReliefFRSelector(uid))
 }
 
-/** Accumulator for the RELIEF weight pass (one per task via
-  * treeAggregate). Two storage modes behind one interface:
+/** Accumulator for the RELIEF weight pass, one per task: each task
+  * builds one over its rows in `mapPartitions`, and `treeReduce` merges
+  * them. Two storage modes behind one interface:
   *
   *  - dense (while [[ReliefFRSelector.denseLayout]] admits the fit's
   *    shape): flat primitive arrays —
   *    relevance [feature × (2·nClasses)], marginal [feature],
-  *    joint [topFeatureSlot × feature]. Fastest, O(nFeat) memory.
+  *    joint [topFeatureSlot × feature]. Fastest, O(nFeat) memory,
+  *    allocated on the first pair, so an empty partition holds none.
   *  - sparse (above the dense budget): open-addressing LongMaps keyed by
   *    feature — memory scales with the features actually touched, not
   *    nFeat, which is what makes kddb-scale (tens of millions of
   *    features, reference README) inputs feasible. Never-active
   *    features have exactly-zero relevance in both modes.
   *
+  * The joint collision mass J[s, f] sums, over the (query, neighbor)
+  * pairs that collide on both top feature s and feature f ≠ s, the mean
+  * of their two votes. Discrete data in the dense layout votes 1.0 on
+  * every collision, so there J[s, f] is a count: each pair sets its bit
+  * in the bitset of every feature it collides on, and a full chunk of
+  * 64 × `words` pairs (or [[flush]]) adds popcount(bits(s) & bits(f))
+  * to J[s, f]. The counts are exact in any order. Every other pair
+  * scatter-adds its votes into J.
+  *
   * classCounter (2·nClasses) is always dense. Scratch buffers grow with
   * the per-pair collision count, never with nFeat.
   */
-final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean) extends Serializable {
+final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean, continuous: Boolean,
+    topFeatures: Array[Int]) extends Serializable {
   private val nGroups = 2 * nClasses
+  private def nTop = topFeatures.length
   private val classCounter = new Array[Double](nGroups)
 
-  // dense stores
-  private var relArr: Array[Double] = if (dense) new Array[Double](nFeat * nGroups) else null
-  private var margArr: Array[Double] = if (dense) new Array[Double](nFeat) else null
+  // dense stores, allocated on the first pair
+  private var relArr: Array[Double] = _
+  private var margArr: Array[Double] = _
   // candidate semantics must match sparse mode: only features actually
   // visited by some (query, neighbor) pair are ranked
-  private var touched: Array[Boolean] = if (dense) new Array[Boolean](nFeat) else null
-  private var jointArr: Array[Double] = _ // [slot × nFeat], dense mode
-  private var slotOfArr: Array[Int] = _ // feature -> slot or -1, dense mode
+  private var touched: Array[Boolean] = _
+  private var jointArr: Array[Double] = _ // [slot × nFeat]
+
+  // derived from the constructor's arguments, so never shipped
+  @transient private lazy val slotOfArr: Array[Int] = { // feature -> slot or -1
+    val a = Array.fill(nFeat)(-1)
+    var s = 0
+    while (s < nTop) { a(topFeatures(s)) = s; s += 1 }
+    a
+  }
+  @transient private lazy val topFeatSet: scala.collection.immutable.Set[Int] = topFeatures.toSet
+
+  // discrete, dense: one bitset of the chunk's pairs per feature,
+  // word-major [word × feature], so a pair sets its bits along one
+  // row; words ≤ nTop keeps it within the joint matrix. A task
+  // flushes before its accumulator ships.
+  @transient private lazy val popcount = dense && !continuous && nTop > 0
+  @transient private lazy val words = math.min(ReliefAcc.MaxWords, nTop)
+  @transient private var bits: Array[Long] = _
+  @transient private var pending = 0 // pairs in the chunk, folded into jointArr on flush
 
   // sparse stores (feature-keyed)
-  private var relMap: scala.collection.mutable.LongMap[Array[Double]] =
+  private val relMap: scala.collection.mutable.LongMap[Array[Double]] =
     if (dense) null else scala.collection.mutable.LongMap.empty
-  private var margMap: scala.collection.mutable.LongMap[Double] =
+  private val margMap: scala.collection.mutable.LongMap[Double] =
     if (dense) null else scala.collection.mutable.LongMap.empty
-  private var jointMap: scala.collection.mutable.LongMap[Double] =
+  private val jointMap: scala.collection.mutable.LongMap[Double] =
     if (dense) null else scala.collection.mutable.LongMap.empty
-  private var topFeatSet: scala.collection.immutable.Set[Int] = _
 
-  private var slotFeat: Array[Int] = _ // slot -> feature
-  private var inited = false
-
-  def init(topFeatures: Array[Int]): Unit = if (!inited) {
-    inited = true
-    slotFeat = topFeatures
-    if (dense) {
-      slotOfArr = Array.fill(nFeat)(-1)
-      var s = 0
-      while (s < topFeatures.length) { slotOfArr(topFeatures(s)) = s; s += 1 }
-      jointArr = new Array[Double](topFeatures.length * nFeat)
-    } else {
-      topFeatSet = topFeatures.toSet
-    }
+  private def allocDense(): Unit = {
+    relArr = new Array[Double](nFeat * nGroups)
+    margArr = new Array[Double](nFeat)
+    touched = new Array[Boolean](nFeat)
+    jointArr = new Array[Double](nTop * nFeat)
   }
 
   // scratch: collided (feature, vote) pairs for the current neighbor
@@ -608,25 +631,48 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean) extends Seriali
       jointMap.update(key, jointMap.getOrElse(key, 0.0) + v)
     }
 
-  /** Deterministic uniform [0,1) from (seed, queryId, rowId) — splitmix64. */
-  private def pairRand(seed: Long, qid: Long, id: Long): Double = {
-    var z = seed ^ (qid * 0x9e3779b97f4a7c15L) ^ (id * 0xbf58476d1ce4e5b9L)
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z = z ^ (z >>> 31)
-    (z >>> 11).toDouble / (1L << 53).toDouble
-  }
-
   def addPair(qid: Long, qv: Vector, qlabel: Double, id: Long, v: Vector, label: Double,
-      labelIdx: Map[Double, Int], seed: Long, continuous: Boolean,
-      lowerDistanceTh: Double): Unit = {
-    ensureScratch()
+      labelIdx: Map[Double, Int], seed: Long, lowerDistanceTh: Double): Unit = {
+    if (dense && relArr == null) allocDense()
+    if (popcount) {
+      if (bits == null) bits = new Array[Long](words * nFeat)
+      else if (pending == 64 * words) flush()
+    }
     val mod = if (label == qlabel) 0 else nClasses
     val g = labelIdx(label) + mod
     classCounter(g) += 1
 
+    (qv, v) match {
+      case (q: DenseVector, d: DenseVector) if popcount =>
+        // discrete: a collision is an exact match and votes 1.0; the
+        // updates are branch-free (adding 0.0 leaves a marginal as is)
+        val qa = q.values; val da = d.values
+        val rel = relArr; val marg = margArr; val tch = touched; val bs = bits
+        val row = (pending >>> 6) * nFeat
+        val bit = 1L << (pending & 63)
+        var f = 0
+        while (f < nFeat) {
+          val diff = math.abs(qa(f) - da(f))
+          rel(f * nGroups + g) += diff
+          tch(f) = true
+          val hit = if (diff <= 0.0) 1L else 0L
+          marg(f) += hit
+          bs(row + f) |= bit & -hit
+          f += 1
+        }
+        pending += 1
+      case _ => scorePair(qid, qv, id, v, g, seed, lowerDistanceTh)
+    }
+  }
+
+  /** [[addPair]] for every pair but a dense discrete one in the dense
+    * layout: the joint mass is scatter-added per pair.
+    */
+  private def scorePair(qid: Long, qv: Vector, id: Long, v: Vector, g: Int,
+      seed: Long, lowerDistanceTh: Double): Unit = {
+    ensureScratch()
     val thr =
-      if (continuous) 6.0 * (1.0 - (lowerDistanceTh + pairRand(seed, qid, id) * lowerDistanceTh))
+      if (continuous) 6.0 * (1.0 - (lowerDistanceTh + ReliefAcc.pairRand(seed, qid, id) * lowerDistanceTh))
       else 0.0
     var nCollided = 0
 
@@ -686,15 +732,54 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean) extends Seriali
     case d: DenseVector => (Array.range(0, d.size), d.values)
   }
 
+  /** Folds the pending chunk of pair bitsets into the joint matrix:
+    * J[s, f] += popcount(bits(top_s) & bits(f)) for f ≠ top_s. A task
+    * calls it after its last pair; merges and reads call it too.
+    */
+  def flush(): Unit = if (pending > 0) {
+    val used = (pending + 63) >>> 6
+    // the top features' bitsets, slot-major, and feature f's, gathered
+    val top = new Array[Long](nTop * used)
+    val col = new Array[Long](used)
+    var s = 0; var w = 0
+    while (s < nTop) {
+      w = 0
+      while (w < used) { top(s * used + w) = bits(w * nFeat + topFeatures(s)); w += 1 }
+      s += 1
+    }
+    var f = 0
+    while (f < nFeat) {
+      w = 0
+      while (w < used) { col(w) = bits(w * nFeat + f); w += 1 }
+      s = 0
+      while (s < nTop) {
+        if (topFeatures(s) != f) {
+          val tb = s * used
+          var c = 0
+          w = 0
+          while (w < used) { c += java.lang.Long.bitCount(top(tb + w) & col(w)); w += 1 }
+          if (c != 0) jointArr(s * nFeat + f) += c
+        }
+        s += 1
+      }
+      f += 1
+    }
+    java.util.Arrays.fill(bits, 0, used * nFeat, 0L)
+    pending = 0
+  }
+
   def mergeWith(o: ReliefAcc): ReliefAcc = {
+    flush(); o.flush()
     var i = 0
     while (i < nGroups) { classCounter(i) += o.classCounter(i); i += 1 }
     if (dense) {
-      i = 0; while (i < relArr.length) { relArr(i) += o.relArr(i); i += 1 }
-      i = 0; while (i < nFeat) { margArr(i) += o.margArr(i); touched(i) |= o.touched(i); i += 1 }
-      if (o.jointArr != null) {
-        if (jointArr == null) { jointArr = o.jointArr; slotOfArr = o.slotOfArr; slotFeat = o.slotFeat }
-        else { i = 0; while (i < jointArr.length) { jointArr(i) += o.jointArr(i); i += 1 } }
+      if (relArr == null) {
+        relArr = o.relArr; margArr = o.margArr; touched = o.touched
+        jointArr = o.jointArr
+      } else if (o.relArr != null) {
+        i = 0; while (i < relArr.length) { relArr(i) += o.relArr(i); i += 1 }
+        i = 0; while (i < nFeat) { margArr(i) += o.margArr(i); touched(i) |= o.touched(i); i += 1 }
+        i = 0; while (i < jointArr.length) { jointArr(i) += o.jointArr(i); i += 1 }
       }
     } else {
       o.relMap.foreachEntry { (f, gs) =>
@@ -728,10 +813,12 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean) extends Seriali
       sum
     }
     if (dense) {
-      var f = 0
-      while (f < nFeat) {
-        if (touched(f)) fn(f, weightOf(gi => relArr(f * nGroups + gi)))
-        f += 1
+      if (relArr != null) {
+        var f = 0
+        while (f < nFeat) {
+          if (touched(f)) fn(f, weightOf(gi => relArr(f * nGroups + gi)))
+          f += 1
+        }
       }
     } else {
       relMap.foreachEntry((f, gs) => fn(f.toInt, weightOf(gi => gs(gi))))
@@ -740,27 +827,96 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean) extends Seriali
 
   def foreachMarginal(fn: (Int, Double) => Unit): Unit =
     if (dense) {
-      var f = 0
-      while (f < nFeat) { if (margArr(f) != 0.0) fn(f, margArr(f)); f += 1 }
+      if (margArr != null) {
+        var f = 0
+        while (f < nFeat) { if (margArr(f) != 0.0) fn(f, margArr(f)); f += 1 }
+      }
     } else margMap.foreachEntry((f, v) => fn(f.toInt, v))
 
   def classCounterSum: Double = { var s = 0.0; var i = 0; while (i < nGroups) { s += classCounter(i); i += 1 }; s }
 
-  def foreachJoint(fn: (Int, Int, Double) => Unit): Unit =
+  /** Streams every nonzero J[s, f] as `fn(top_s, f, mass)`. */
+  def foreachJoint(fn: ReliefAcc.JointFn): Unit =
     if (dense) {
       if (jointArr != null) {
+        flush()
         var s = 0
-        while (s < slotFeat.length) {
+        while (s < nTop) {
           var f = 0
           while (f < nFeat) {
             val v = jointArr(s * nFeat + f)
-            if (v != 0.0) fn(slotFeat(s), f, v)
+            if (v != 0.0) fn(topFeatures(s), f, v)
             f += 1
           }
           s += 1
         }
       }
-    } else if (jointMap != null) {
-      jointMap.foreachEntry((k, v) => fn((k / nFeat).toInt, (k % nFeat).toInt, v))
+    } else jointMap.foreachEntry((k, v) => fn((k / nFeat).toInt, (k % nFeat).toInt, v))
+}
+
+object ReliefAcc {
+  /** Cap on a chunk's bitset words per feature: 64 words, 4096 pairs. */
+  private val MaxWords = 64
+
+  /** A callback on primitives. `Function3` is not specialized, so a
+    * `(Int, Int, Double) => Unit` lambda boxes its arguments on every
+    * call; (Int, Double) => Unit is specialized and does not.
+    */
+  trait JointFn { def apply(top: Int, f: Int, mass: Double): Unit }
+
+  /** Deterministic uniform [0,1) from (seed, queryId, rowId) — splitmix64. */
+  private[ml] def pairRand(seed: Long, qid: Long, id: Long): Double = {
+    var z = seed ^ (qid * 0x9e3779b97f4a7c15L) ^ (id * 0xbf58476d1ce4e5b9L)
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z = z ^ (z >>> 31)
+    (z >>> 11).toDouble / (1L << 53).toDouble
+  }
+}
+
+/** An open-addressing `Long → Double` table on two primitive arrays,
+  * for the fit's joint collision mass: adds, reads and in-place updates
+  * box nothing. Keys are non-negative (-1 marks a free slot); linear
+  * probing, grown at half load.
+  */
+private[ml] final class JointTable {
+  private var keys = Array.fill(1024)(-1L)
+  private var vals = new Array[Double](1024)
+  private var n = 0
+
+  private def slotOf(k: Long): Int = {
+    val mask = keys.length - 1
+    var i = ((k * 0x9e3779b97f4a7c15L) >>> 32).toInt & mask
+    while (keys(i) != k && keys(i) != -1L) i = (i + 1) & mask
+    i
+  }
+
+  /** Adds `v` to key `k`'s value; a new key takes `v` as it is. */
+  def add(k: Long, v: Double): Unit = {
+    val i = slotOf(k)
+    if (keys(i) == k) vals(i) += v
+    else {
+      keys(i) = k; vals(i) = v; n += 1
+      if (2 * n > keys.length) grow()
     }
+  }
+
+  /** Key `k`'s value, 0.0 when absent. */
+  def apply(k: Long): Double = { val i = slotOf(k); if (keys(i) == k) vals(i) else 0.0 }
+
+  /** Replaces every value v of key k by fn(k, v). */
+  def mapValuesInPlace(fn: (Long, Double) => Double): Unit = {
+    var i = 0
+    while (i < keys.length) { if (keys(i) != -1L) vals(i) = fn(keys(i), vals(i)); i += 1 }
+  }
+
+  private def grow(): Unit = {
+    val (oldK, oldV) = (keys, vals)
+    keys = Array.fill(oldK.length * 2)(-1L); vals = new Array[Double](oldK.length * 2)
+    var i = 0
+    while (i < oldK.length) {
+      if (oldK(i) != -1L) { val j = slotOf(oldK(i)); keys(j) = oldK(i); vals(j) = oldV(i) }
+      i += 1
+    }
+  }
 }

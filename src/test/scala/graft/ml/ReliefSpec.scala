@@ -177,6 +177,34 @@ class ReliefSpec extends SparkSpec {
     assert(m.redundancySelection.nonEmpty)
   }
 
+  test("a discrete fit is bit-exact under repartitioning") {
+    // every addend of a discrete fit is an integer, so merge order
+    // cannot move a bit: selections and every weight compare with ==
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    val df = (0 until 240).map { i =>
+      val label = (i % 3).toDouble
+      val x = Array.fill(12)(rnd.nextInt(3).toDouble)
+      if (rnd.nextDouble() < 0.8) x(0) = label
+      if (rnd.nextDouble() < 0.9) x(1) = x(0)
+      (label, Vectors.dense(x))
+    }.toDF("label", "features")
+    def fitD(d: DataFrame) = new ReliefFRSelector()
+      .setInputCol("features").setLabelCol("label").setOutputCol("out")
+      .setNumTopFeatures(3).setNumNeighbors(4)
+      .setEstimationRatio(0.5).setBatchSize(0.25)
+      .setDiscreteData(true).setRedundancyRemoval(true).setSeed(3L)
+      .fit(d)
+    val m = fitD(df)
+    val m2 = fitD(df.repartition(7))
+    assert(m.stdSelection.head == 0)
+    assert(m2.stdSelection.toSeq == m.stdSelection.toSeq)
+    assert(m2.redundancySelection.toSeq == m.redundancySelection.toSeq)
+    assert(m2.weightedFeatures.toSeq == m.weightedFeatures.toSeq)
+    assert(m2.weightedValues.toSeq == m.weightedValues.toSeq)
+    assert(m2.defaultWeight == m.defaultWeight)
+  }
+
   test("dense and sparse weight-pass layouts select identically") {
     // the weight pass picks its layout from the fit's shape: the same
     // sparse rows at width 16 fit the dense budget, at a width whose
