@@ -153,8 +153,8 @@ trait ReliefFRParams extends Params {
   * doubles); the weight pass holds nFeat × (2·nClasses + lowerFeat + 1)
   * doubles per task (relevance, the lowerFeat × nFeat joint matrix,
   * marginals) while that fits [[ReliefFRSelector.DenseBudgetDoubles]]
-  * (2^20 × 35), plus on discrete data nFeat × min(64, lowerFeat) longs
-  * of chunk bitsets (never more than the joint matrix), and
+  * (2^20 × 35), plus on discrete data nFeat × min(8, lowerFeat) longs
+  * of chunk bitsets (64 MB at 2^20 features), and
   * feature-keyed maps bounded by the touched features above it — so
   * very high-dimensional sparse data never allocates O(nFeat) arrays;
   * lowering lowerFeatureThreshold keeps a wider input in the faster
@@ -544,11 +544,19 @@ object ReliefFRSelector extends MLReadable[ReliefFRSelector] {
   * The joint collision mass J[s, f] sums, over the (query, neighbor)
   * pairs that collide on both top feature s and feature f ≠ s, the mean
   * of their two votes. Discrete data in the dense layout votes 1.0 on
-  * every collision, so there J[s, f] is a count: each pair sets its bit
-  * in the bitset of every feature it collides on, and a full chunk of
-  * 64 × `words` pairs (or [[flush]]) adds popcount(bits(s) & bits(f))
-  * to J[s, f]. The counts are exact in any order. Every other pair
-  * scatter-adds its votes into J.
+  * every collision, so there J[s, f] is a count, taken per chunk of
+  * 64 × `words` pairs in one of two ways: by popcount, where each pair
+  * sets its bit in the bitset of every feature it collides on and a
+  * full chunk (or [[flush]]) adds popcount(bits(s) & bits(f)) to
+  * J[s, f], or by scatter. A pair costs nTop × nFeat / 64 word ops by
+  * popcount, and a scan of its features plus one add per (collided
+  * top feature, collided feature) by scatter. So the popcounts win
+  * when features match often or the top features are few, and the
+  * scatter wins on many-valued features with many top features (2000
+  * features, 150 top: above about 20 values per feature). Each chunk
+  * takes the mode that [[ReliefAcc.scatterCheaper]] found cheaper for
+  * the chunk before it. The counts are exact in any order and either
+  * mode. Every other pair scatter-adds its votes into J.
   *
   * classCounter (2·nClasses) is always dense. Scratch buffers grow with
   * the per-pair collision count, never with nFeat.
@@ -576,14 +584,19 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean, continuous: Boo
   }
   @transient private lazy val topFeatSet: scala.collection.immutable.Set[Int] = topFeatures.toSet
 
-  // discrete, dense: one bitset of the chunk's pairs per feature,
-  // word-major [word × feature], so a pair sets its bits along one
-  // row; words ≤ nTop keeps it within the joint matrix. A task
-  // flushes before its accumulator ships.
-  @transient private lazy val popcount = dense && !continuous && nTop > 0
+  // discrete, dense: the pairs go in chunks of 64 × words. A popcount
+  // chunk keeps one bitset of its pairs per feature, word-major
+  // [word × feature], so a pair sets its bits along one row; words ≤
+  // nTop keeps it within the joint matrix. A scatter chunk adds each
+  // pair's joint counts as it comes. Each chunk takes the mode that
+  // the previous chunk's collisions say is cheaper. A task flushes
+  // before its accumulator ships.
+  @transient private lazy val chunked = dense && !continuous && nTop > 0
   @transient private lazy val words = math.min(ReliefAcc.MaxWords, nTop)
   @transient private var bits: Array[Long] = _
-  @transient private var pending = 0 // pairs in the chunk, folded into jointArr on flush
+  @transient private var scatterChunk = false
+  @transient private var pending = 0 // pairs in the chunk
+  @transient private var scatterAdds = 0L // joint adds the chunk's pairs take by scatter
 
   // sparse stores (feature-keyed)
   private val relMap: scala.collection.mutable.LongMap[Array[Double]] =
@@ -634,22 +647,25 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean, continuous: Boo
   def addPair(qid: Long, qv: Vector, qlabel: Double, id: Long, v: Vector, label: Double,
       labelIdx: Map[Double, Int], seed: Long, lowerDistanceTh: Double): Unit = {
     if (dense && relArr == null) allocDense()
-    if (popcount) {
-      if (bits == null) bits = new Array[Long](words * nFeat)
-      else if (pending == 64 * words) flush()
+    if (chunked && pending == 64 * words) {
+      val next = ReliefAcc.scatterCheaper(scatterAdds, pending, nTop, nFeat)
+      flush()
+      scatterChunk = next; scatterAdds = 0L
     }
     val mod = if (label == qlabel) 0 else nClasses
     val g = labelIdx(label) + mod
     classCounter(g) += 1
 
     (qv, v) match {
-      case (q: DenseVector, d: DenseVector) if popcount =>
+      case (q: DenseVector, d: DenseVector) if chunked && !scatterChunk =>
         // discrete: a collision is an exact match and votes 1.0; the
         // updates are branch-free (adding 0.0 leaves a marginal as is)
+        if (bits == null) bits = new Array[Long](words * nFeat)
         val qa = q.values; val da = d.values
         val rel = relArr; val marg = margArr; val tch = touched; val bs = bits
         val row = (pending >>> 6) * nFeat
         val bit = 1L << (pending & 63)
+        var hits = 0L
         var f = 0
         while (f < nFeat) {
           val diff = math.abs(qa(f) - da(f))
@@ -658,18 +674,26 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean, continuous: Boo
           val hit = if (diff <= 0.0) 1L else 0L
           marg(f) += hit
           bs(row + f) |= bit & -hit
+          hits += hit
           f += 1
         }
+        var topHits = 0L
+        var s = 0
+        while (s < nTop) { if ((bs(row + topFeatures(s)) & bit) != 0L) topHits += 1; s += 1 }
+        scatterAdds += topHits * (hits - 1)
         pending += 1
-      case _ => scorePair(qid, qv, id, v, g, seed, lowerDistanceTh)
+      case _ =>
+        val adds = scorePair(qid, qv, id, v, g, seed, lowerDistanceTh)
+        if (chunked) { scatterAdds += adds; pending += 1 }
     }
   }
 
-  /** [[addPair]] for every pair but a dense discrete one in the dense
-    * layout: the joint mass is scatter-added per pair.
+  /** [[addPair]] for every pair but a dense discrete one in a popcount
+    * chunk: the joint mass is scatter-added per pair. Returns the
+    * number of joint adds.
     */
   private def scorePair(qid: Long, qv: Vector, id: Long, v: Vector, g: Int,
-      seed: Long, lowerDistanceTh: Double): Unit = {
+      seed: Long, lowerDistanceTh: Double): Long = {
     ensureScratch()
     val thr =
       if (continuous) 6.0 * (1.0 - (lowerDistanceTh + ReliefAcc.pairRand(seed, qid, id) * lowerDistanceTh))
@@ -712,10 +736,12 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean, continuous: Boo
     }
 
     // joint collision mass between colliding pairs with a top-feature side
+    var topCollided = 0L
     var x = 0
     while (x < nCollided) {
       val fi = cF(x)
       if (isTop(fi)) {
+        topCollided += 1
         var y = 0
         while (y < nCollided) {
           val fj = cF(y)
@@ -725,6 +751,7 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean, continuous: Boo
       }
       x += 1
     }
+    topCollided * (nCollided - 1)
   }
 
   private def activeOf(v: Vector): (Array[Int], Array[Double]) = v match {
@@ -732,11 +759,17 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean, continuous: Boo
     case d: DenseVector => (Array.range(0, d.size), d.values)
   }
 
-  /** Folds the pending chunk of pair bitsets into the joint matrix:
-    * J[s, f] += popcount(bits(top_s) & bits(f)) for f ≠ top_s. A task
-    * calls it after its last pair; merges and reads call it too.
+  /** Ends the current chunk; a popcount chunk's bitsets fold into the
+    * joint matrix: J[s, f] += popcount(bits(top_s) & bits(f)) for
+    * f ≠ top_s. A task calls it after its last pair; merges and reads
+    * call it too.
     */
-  def flush(): Unit = if (pending > 0) {
+  def flush(): Unit = {
+    if (pending > 0 && !scatterChunk && bits != null) foldBits()
+    pending = 0
+  }
+
+  private def foldBits(): Unit = {
     val used = (pending + 63) >>> 6
     // the top features' bitsets, slot-major, and feature f's, gathered
     val top = new Array[Long](nTop * used)
@@ -765,7 +798,6 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean, continuous: Boo
       f += 1
     }
     java.util.Arrays.fill(bits, 0, used * nFeat, 0L)
-    pending = 0
   }
 
   def mergeWith(o: ReliefAcc): ReliefAcc = {
@@ -855,8 +887,30 @@ final class ReliefAcc(nFeat: Int, nClasses: Int, dense: Boolean, continuous: Boo
 }
 
 object ReliefAcc {
-  /** Cap on a chunk's bitset words per feature: 64 words, 4096 pairs. */
-  private val MaxWords = 64
+  /** Cap on a chunk's bitset words per feature: 8 words, 512 pairs.
+    * A pair's popcount cost, nTop × nFeat / 64 word ops, does not depend
+    * on it; only the joint matrix's read-modify-writes per chunk do.
+    */
+  private[ml] val MaxWords = 8
+
+  /** Costs in popcount word ops (an AND, a popcount and a sum, 2-3 ns
+    * on a 4 vCPU VM): one scatter add, and the scatter path's slower
+    * scan of a pair's features, per feature. Fitted to ReliefAcc alone
+    * on 2000 features, 50–400 top features and 3–100 values per
+    * feature, where the measured break-even moved between about 15 and
+    * 40 values with the JIT's state; these put it near 20.
+    */
+  private val ScatterAddCost = 4L
+  private val ScatterScanCost = 1L
+
+  /** Whether a discrete chunk of `pairs` pairs whose collisions take
+    * `scatterAdds` joint adds costs less by scatter than by popcounts,
+    * nTop × nFeat / 64 word ops per pair. Up to 64 top features the
+    * popcounts always win. The next chunk takes the cheaper mode;
+    * counts are exact either way, so the choice never changes a result.
+    */
+  private[ml] def scatterCheaper(scatterAdds: Long, pairs: Int, nTop: Int, nFeat: Int): Boolean =
+    scatterAdds * ScatterAddCost + ScatterScanCost * nFeat * pairs.toLong < nTop.toLong * nFeat * pairs / 64
 
   /** A callback on primitives. `Function3` is not specialized, so a
     * `(Int, Int, Double) => Unit` lambda boxes its arguments on every

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The weight pass's accumulator on its own, without Spark: the
   * discrete popcount joint kernel against a brute-force per-pair count,
-  * merging, the first batch's empty top-feature set, and the continuous
-  * scatter path against its per-pair formula.
+  * the switch between popcount and scatter chunks, merging, the first
+  * batch's empty top-feature set, and the continuous scatter path
+  * against its per-pair formula.
   */
 class ReliefAccSpec extends AnyFunSuite {
   private val nFeat = 40
@@ -28,8 +29,9 @@ class ReliefAccSpec extends AnyFunSuite {
   }
   private val discrete = pairs(_.nextInt(3).toDouble)
 
-  private def fed(ps: Seq[Pair], dense: Boolean, continuous: Boolean, topF: Array[Int] = top) = {
-    val a = new ReliefAcc(nFeat, nClasses, dense, continuous, topF)
+  private def fed(ps: Seq[Pair], dense: Boolean, continuous: Boolean, topF: Array[Int] = top,
+      width: Int = nFeat) = {
+    val a = new ReliefAcc(width, nClasses, dense, continuous, topF)
     ps.foreach(p => a.addPair(p.qid, p.q, p.ql, p.id, p.v, p.l, labelIdx, seed, distTh))
     a
   }
@@ -85,6 +87,43 @@ class ReliefAccSpec extends AnyFunSuite {
       if (i % 3 == 0) p.copy(q = p.q.toSparse, v = p.v.toSparse) else p
     }
     assert(jointOf(fed(mixed, dense = true, continuous = false)) == bruteJoint(nonZero, continuous = false))
+  }
+
+  test("chunks switch between popcount and scatter by cost, with the same counts") {
+    // 190 of 200 features on top: popcounts cost 190 × 200 / 64 word
+    // ops a pair. 50 values per feature match rarely, so the scatter is
+    // cheaper; 3 values match often, so the popcounts are.
+    val w = 200
+    val wideTop = (0 until w).filter(_ % 20 != 5).toArray
+    val slot = Array.fill(w)(-1)
+    wideTop.indices.foreach(s => slot(wideTop(s)) = s)
+    val rnd = new scala.util.Random(9)
+    def row(values: Int) = Vectors.dense(Array.fill(w)(rnd.nextInt(values).toDouble))
+    def pair(i: Int, values: Int) =
+      Pair(i, row(values), rnd.nextInt(3).toDouble, 5000 + i, row(values), rnd.nextInt(3).toDouble)
+    val chunk = 64 * ReliefAcc.MaxWords
+    // a popcount chunk of 50-valued pairs, a scatter chunk that turns
+    // 3-valued, then a popcount chunk
+    val ps = (0 until chunk + 100).map(pair(_, 50)) ++ (chunk + 100 until 2 * chunk + 200).map(pair(_, 3))
+    def hitsOf(p: Pair) = (0 until w).filter(f => p.q(f) == p.v(f))
+    def adds(chunkPairs: Seq[Pair]) =
+      chunkPairs.map { p => val c = hitsOf(p); c.count(slot(_) >= 0).toLong * (c.size - 1) }.sum
+    assert(ReliefAcc.scatterCheaper(adds(ps.take(chunk)), chunk, wideTop.length, w))
+    assert(!ReliefAcc.scatterCheaper(adds(ps.slice(chunk, 2 * chunk)), chunk, wideTop.length, w))
+
+    val want = new Array[Double](wideTop.length * w)
+    ps.foreach { p =>
+      val c = hitsOf(p)
+      for (t <- c if slot(t) >= 0; f <- c if f != t) want(slot(t) * w + f) += 1.0
+    }
+    val acc = fed(ps, dense = true, continuous = false, wideTop, w)
+    assert(jointOf(acc) == want.indices.collect {
+      case i if want(i) != 0.0 => (wideTop(i / w), i % w) -> want(i)
+    }.toMap)
+    val keyed = fed(ps, dense = false, continuous = false, wideTop, w)
+    assert(jointOf(acc) == jointOf(keyed))
+    assert(marginalsOf(acc) == marginalsOf(keyed))
+    assert(relevanceOf(acc) == relevanceOf(keyed))
   }
 
   test("merging two halves equals one accumulator fed every pair") {
