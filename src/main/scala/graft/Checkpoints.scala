@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Lineage cuts for the iterative kernels (PageRank/LPA rounds,
   * NN-descent, the BPE merge loop, CC star-forest, greedy selections).
@@ -19,8 +21,9 @@ import org.apache.spark.sql.Dataset
   * point it at HDFS/object storage): an executor loss re-reads the
   * checkpoint instead of failing. Results are bit-identical in both
   * modes — the knob changes WHERE the materialized rounds live, never
-  * their content (Round15Spec pins g02 and the e23 descent equal
-  * across modes).
+  * their content (Round15Spec pins g02, g04 and the e23 descent equal
+  * across modes). RDD-level kernels (the PageRank/PPR round loop) cut
+  * through [[cut]], under the same knob.
   *
   * Durability contract in one line: localCheckpoint trades fault
   * tolerance for speed; flip the knob when executors are mortal.
@@ -32,6 +35,37 @@ import org.apache.spark.sql.Dataset
   * exactly as any Spark checkpoint dir is managed.
   */
 object Checkpoints {
+
+  /** The one durability decision behind every cut: false for the
+    * default executor-local cut, true when
+    * `spark.graft.checkpoint.reliable` is on (the SparkContext's
+    * checkpoint dir is then set to `spark.graft.checkpoint.dir`).
+    */
+  private def reliable(spark: SparkSession): Boolean =
+    spark.conf.get("spark.graft.checkpoint.reliable", "false").toBoolean && {
+      val sc = spark.sparkContext
+      val dir = spark.conf.getOption("spark.graft.checkpoint.dir")
+        .getOrElse(s"/tmp/graft_ckpt_${sc.applicationId}")
+      // setCheckpointDir appends a UUID subdir — only (re)set on change
+      if (!sc.getCheckpointDir.exists(_.startsWith(dir)))
+        sc.setCheckpointDir(dir)
+      true
+    }
+
+  /** LAZY lineage cut of an RDD under the same knob as the Dataset cuts:
+    * the RDD is marked (and persisted), and the next job that computes
+    * it materializes the cut — executor-local blocks by default, files
+    * under the checkpoint dir in reliable mode (Spark writes those in
+    * one extra job after the computing one). Returns `rdd`; the caller
+    * unpersists it once a later cut supersedes it.
+    */
+  def cut[T](spark: SparkSession, rdd: RDD[T]): RDD[T] = {
+    if (reliable(spark)) {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.checkpoint()
+    } else rdd.localCheckpoint()
+    rdd
+  }
 
   implicit class CutOps[T](private val ds: Dataset[T]) extends AnyVal {
     /** Eager lineage cut honoring `spark.graft.checkpoint.reliable`. */
@@ -53,17 +87,8 @@ object Checkpoints {
       */
     def cutLineageLazy: Dataset[T] = cut(eager = false)
 
-    private def cut(eager: Boolean): Dataset[T] = {
-      val spark = ds.sparkSession
-      if (spark.conf.get("spark.graft.checkpoint.reliable", "false").toBoolean) {
-        val sc = spark.sparkContext
-        val dir = spark.conf.getOption("spark.graft.checkpoint.dir")
-          .getOrElse(s"/tmp/graft_ckpt_${sc.applicationId}")
-        // setCheckpointDir appends a UUID subdir — only (re)set on change
-        if (!sc.getCheckpointDir.exists(_.startsWith(dir)))
-          sc.setCheckpointDir(dir)
-        ds.checkpoint(eager = eager)
-      } else ds.localCheckpoint(eager)
-    }
+    private def cut(eager: Boolean): Dataset[T] =
+      if (reliable(ds.sparkSession)) ds.checkpoint(eager = eager)
+      else ds.localCheckpoint(eager)
   }
 }

@@ -1,10 +1,13 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
-import graft.Tables
+import graft.{Checkpoints, Tables}
 import graft.Checkpoints.CutOps
 
 /** Graph-centrality operators over entity-transition graphs.
@@ -56,12 +59,11 @@ object Graph {
     *
     * Scale shape: the graph frame is domain-bounded (|types| nodes,
     * ≤ |types|² edges) after ONE corpus pass (q39's lag window —
-    * per-user, never global); each iteration is a broadcast-size
-    * join + map-side-combining aggregate, materialized per round
-    * (the e23 lineage discipline — 10 unrolled joins must not stack
-    * into one analysis tree). On a host graph the identical plan
-    * shuffle-joins on the edge key; nothing here is driver-looped
-    * over data.
+    * per-user, never global); the rounds are [[powerIteration]]'s one
+    * RDD job each over hash-partitioned node state, with a lineage cut
+    * per round. On a host graph the same loop shuffles only the
+    * (dst, pr·w) contributions; nothing here is driver-looped over
+    * data.
     */
   def g01TransitionPagerank(spark: SparkSession, dir: String): DataFrame = {
     val counts = graft.queries.Events.q39EventTransitions(spark, dir)
@@ -116,187 +118,131 @@ object Graph {
 
   /** [[pagerankScores]] plus its convergence signal: [[powerIteration]]
     * with the uniform teleport, PR₀ = 1/N and the dangling mass shared
-    * out as dang/N. N is ONE driver count up front and a literal in the
-    * update expression.
+    * out as dang/N. N is the node count the kernel's build job returns.
     */
   private[graft] def pagerankScoresTracked(
-      nodesIn: DataFrame, counts: DataFrame): (DataFrame, DataFrame) = {
-    val nodes = nodesIn.cutLineageLazy
-    val n: Double = nodes.count().toDouble
-    powerIteration("pagerank", nodes, counts, lit(1.0 / n),
-      lit((1.0 - Damping) / n), _ / lit(n), PrMaxIters)
-  }
+      nodes: DataFrame, counts: DataFrame): (DataFrame, DataFrame) =
+    powerIteration("pagerank", nodes, counts, PrMaxIters, uniformStart = true) { n =>
+      val tele = (1.0 - Damping) / n
+      (_, s, dang) => tele + Damping * (s + dang / n)
+    }
+
+  /** Spark's `round(x, 6)` on a double (HALF_UP over the decimal form
+    * of x, NaN and ±∞ unchanged), so executors take the 6-decimal gate
+    * decision exactly as the SQL engines do.
+    */
+  private[graft] def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** One node of the power iteration: teleport weight `t`, the targets
+    * and row-stochastic weights of its out-edges, whether it has none
+    * at all (`dng`: its rank is dangling mass), and its rank this round
+    * and the round before.
+    */
+  private final case class PrNode(
+      t: Double, dst: Array[Any], w: Array[Double], dng: Boolean, pr: Double, prev: Double)
 
   /** The damped power-iteration kernel behind PageRank (g01, g04, s28,
     * s31) and personalized PageRank (g08, s35) over a (nodes,
     * edge-count) pair. The w normalization (row-stochastic per source,
     * q39's p_trans formula) lives HERE so every path computes
     * bit-identical weights. Each round is
-    * `pr'(v) = teleport + d·(Σ_{u→v} pr(u)·w(u,v) + dangShare(dang))`
-    * with `dang` the summed rank of the nodes without out-edges; the
-    * callers pass only what differs — the start value, the teleport
-    * term, the dangling share and the round cap — as column
-    * expressions, so each variant keeps its own IEEE expression.
-    * `nodes` holds `node` plus any columns those expressions read
-    * (PPR's teleport vector `t`); they ride on every round's frame.
-    * Returns the UNROUNDED (node, pr) frame and its signal; rank
-    * layers live in [[pagerankFrom]] (global rank — domain-bounded
-    * graphs only) and [[topRanked]] (top-N merge — the
-    * unbounded-domain path).
+    * `pr'(v) = update(t(v), Σ_{u→v} pr(u)·w(u,v), dang)` with `dang`
+    * the summed rank of the nodes without out-edges; the callers pass
+    * only what differs — whether pr₀ is the uniform 1/N or the teleport
+    * weight t, the update given N, and the round cap — as Scala doubles
+    * in their own IEEE expressions. `nodes` holds `node` (repeats are
+    * merged) and, for PPR, the teleport weight `t`. Returns the
+    * UNROUNDED (node, pr) frame and its signal; rank layers live in
+    * [[pagerankFrom]] (global rank — domain-bounded graphs only) and
+    * [[topRanked]] (top-N merge — the unbounded-domain path).
     *
     * The first [[PrIters]] rounds are the unconditional documented
-    * budget (preserving every historical pin where that budget already
-    * reached the 6-decimal fixpoint); past it the rounds are
-    * QUANT-GATED up to `cap` (r13 VERDICT #5: the sf1 handoff graph
-    * still had 1 172 ranks moving at the output quantization after 10
-    * rounds — measured offline it needs 23): see [[quantGatedRounds]].
+    * budget; past it the rounds are QUANT-GATED up to `cap`: the
+    * iteration stops after the first round in which no node's
+    * `round(pr, 6)` moved. The gate is taken on the 6-decimal OUTPUT
+    * contract, where the engines' ulp-level float drift is already
+    * absorbed, so the oracle mirrors the stop decision layer by layer
+    * (a CASE on the same count) and stays bit-equal at any corpus size.
+    *
+    * Job shape: the node state is an RDD hash-partitioned
+    * `spark.sql.shuffle.partitions` wide, built once (one job, which
+    * also returns N and the start's dangling mass). Each round is ONE
+    * job: a flatMap emits (dst, pr·w), `reduceByKey` on the state's
+    * partitioner sums it, `zipPartitions` with the state applies the
+    * update, and the job's per-partition result is the round's
+    * quantized-change count and the next round's dangling sum, merged
+    * on the driver in partition order — no census job, no broadcast,
+    * no per-round query planning. Every round's state is a lazy
+    * [[graft.Checkpoints.cut]] (the durability knob applies) and the
+    * one it supersedes is unpersisted, so a call holds at most two
+    * states; the last one backs the returned frame until that frame is
+    * garbage (Spark's ContextCleaner then drops it).
     */
   private def powerIteration(
-      tag: String, nodes: DataFrame, counts: DataFrame,
-      start: Column, teleport: Column, dangShare: Column => Column,
-      cap: Int): (DataFrame, DataFrame) = {
-    // r15 NOTE (r14 VERDICT #7, A/B-REJECTED): persisting the
-    // round-invariant frames (edges, nodeF) PRE-PARTITIONED on their
-    // join keys — so each round's joins reuse one exchange instead of
-    // re-shuffling the invariant side (guide §2.4) — was measured on
-    // same-box alternating arms at sf0.1/32c and REGRESSED the kernel
-    // family 0.49–0.94× (g04 3.30→6.73 s, g08 3.74→7.69 s, subset
-    // total 0.70×): the per-round InMemoryRelation columnar
-    // encode/decode and the lost AQE runtime join planning cost far
-    // more than the saved exchanges on these frame sizes. Checkpoint
-    // cuts stay.
-    val edges = counts
-      .select(col("prev_type"), col("next_type"),
-        (col("n_trans").cast("double") /
-          sum(col("n_trans")).over(Window.partitionBy(col("prev_type"))))
-          .as("w"))
-      .cutLineageLazy
-    // r14 kernel-overhead rework (guide §1/§2.4; results bit-identical):
-    // the sf0.1 bill was ~13 single-task driver jobs PER ROUND (131 for
-    // g01, ~37 ms each — jobs, not data). Removed per round:
-    //  - the 1/N broadcast: round-invariant scalars are driver values
-    //    folded into the callers' expressions as literals;
-    //  - the dangling anti-join + per-round `sources.distinct()`
-    //    recompute: dangling-ness is round-invariant, so it is a
-    //    boolean `dng` column carried ON the rank frame (same addend
-    //    set for the dang sum — sum(pr) over exactly the non-source
-    //    nodes);
-    //  - the `cur.select(node)` re-exchange in the update join: the
-    //    node set is round-invariant, so the update joins the ONE
-    //    materialized (node, dng, …) frame instead of re-shuffling cur.
-    // Cuts are LAZY (cutLineageLazy): plan truncation without a
-    // dedicated materialization job — the next round's stages (or the
-    // quant-gate count) materialize the rows anyway.
-    val sources = edges.select(col("prev_type").as("node")).distinct()
-    val nodeF = nodes
-      .join(sources.withColumn("is_src", lit(true)), Seq("node"), "left")
-      .select(col("node") +: col("is_src").isNull.as("dng") +:
-        nodes.columns.filter(_ != "node").map(col): _*)
-      .cutLineageLazy
-    val carry = nodeF.columns.map(col)
-    def update(dang: Column): Column =
-      (teleport + lit(Damping) * (coalesce(col("s"), lit(0.0)) + dangShare(dang)))
-        .as("pr")
-    def contrib(cur: DataFrame): DataFrame =
-      cur.join(edges, cur("node") === edges("prev_type"))
-        .groupBy(col("next_type").as("node"))
-        .agg(sum(col("pr") * col("w")).as("s"))
-    def prRound(cur: DataFrame): DataFrame = {
-      val dang = cur.where(col("dng"))
-        .agg(coalesce(sum("pr"), lit(0.0)).as("dang"))
-      nodeF
-        .join(contrib(cur), Seq("node"), "left")
-        .crossJoin(broadcast(dang))
-        .select(carry :+ update(col("dang")): _*)
-    }
-    // gated-phase round (r15): same contrib join and the same update
-    // arithmetic as prRound, but (a) the update joins the checkpointed
-    // `cur` itself (identical carried columns and values as nodeF — cur
-    // is always nodeF's left-join image), carrying cur's pr through as
-    // prev_pr for the combined gate census, and (b) the dangling mass
-    // arrives as a driver literal (e.g. lit(dang)/lit(n) constant-folds
-    // to the identical IEEE division of the identical doubles).
-    def prRoundTracked(cur: DataFrame, dang: Double): DataFrame =
-      cur.select(carry :+ col("pr").as("prev_pr"): _*)
-        .join(contrib(cur), Seq("node"), "left")
-        .select(carry :+ col("prev_pr") :+ update(lit(dang)): _*)
-    var pr = nodeF.select(carry :+ start.as("pr"): _*).cutLineageLazy
-    var prev = pr
-    for (it <- 1 to PrIters) {
-      if (it == PrIters) prev = pr
-      pr = prRound(pr)
-      // cut lineage every OTHER round: one level of nested
-      // join/agg analyzes fine and halves the per-round planning cost
-      if (it % 2 == 0 || it == PrIters) pr = pr.cutLineageLazy
-    }
-    val (fin, rounds, changed) = quantGatedRounds(prev, pr, prRoundTracked, cap)
+      tag: String, nodes: DataFrame, counts: DataFrame, cap: Int, uniformStart: Boolean)(
+      law: Double => (Double, Double, Double) => Double): (DataFrame, DataFrame) = {
     val spark = nodes.sparkSession
+    val sc = spark.sparkContext
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val nodeType = nodes.schema("node").dataType
+    val tAt = nodes.columns.indexOf("t")
+    val keyed = nodes.select(col("node") +: (if (tAt < 0) Nil else Seq(col("t"))): _*).rdd
+      .map(r => (r.get(0), if (tAt < 0) 0.0 else r.getDouble(1)))
+      .reduceByKey(part, (a, _) => a)
+    // endpoints take the node type, so equal ids hash and compare equal
+    val out = counts.select(col("prev_type").cast(nodeType), col("next_type").cast(nodeType),
+        col("n_trans").cast("long")).rdd
+      .flatMap(r => if (r.isNullAt(0)) None else Some((r.get(0), (r.get(1), r.getLong(2)))))
+    val base = Checkpoints.cut(spark, keyed.cogroup(out, part).flatMapValues { case (ts, es) =>
+      ts.headOption.map { t =>
+        val total = es.iterator.map(_._2).sum
+        val live = es.filter(_._1 != null).toArray
+        PrNode(t, live.map(_._1), live.map(_._2.toDouble / total), es.isEmpty, 0.0, 0.0)
+      }
+    })
+    // (nodes, dangling nodes, their summed t) per partition
+    val built = sc.runJob(base, (it: Iterator[(Any, PrNode)]) =>
+      it.foldLeft((0L, 0L, 0.0)) { case ((n, k, ts), (_, v)) =>
+        if (v.dng) (n + 1, k + 1, ts + v.t) else (n + 1, k, ts) })
+    val n = built.map(_._1).sum.toDouble
+    val pr0 = 1.0 / n
+    val update = law(n)
+    // pr₀'s dangling mass, summed per partition exactly as a round sums it
+    var dang = built.foldLeft(0.0) { case (acc, (_, k, ts)) =>
+      acc + (if (uniformStart) (1L to k).foldLeft(0.0)((a, _) => a + pr0) else ts) }
+    var cur = base.mapValues(v => v.copy(pr = if (uniformStart) pr0 else v.t))
+    var held: RDD[_] = base
+    var rounds = 0
+    var changed = 0L
+    do {
+      val d = dang
+      val sums = cur.flatMap { case (_, v) => v.dst.indices.iterator.map(i => (v.dst(i), v.pr * v.w(i))) }
+        .reduceByKey(part, _ + _)
+      val next = Checkpoints.cut(spark,
+        cur.zipPartitions(sums, preservesPartitioning = true) { (vs, ss) =>
+          val s = ss.toMap
+          vs.map { case (k, v) =>
+            (k, v.copy(pr = update(v.t, s.getOrElse(k, 0.0), d), prev = v.pr))
+          }
+        })
+      val stats = sc.runJob(next, (it: Iterator[(Any, PrNode)]) =>
+        it.foldLeft((0L, 0.0)) { case ((c, dg), (_, v)) =>
+          (if (round6(v.pr) != round6(v.prev)) c + 1 else c, if (v.dng) dg + v.pr else dg) })
+      held.unpersist(blocking = false)
+      held = next
+      cur = next
+      changed = stats.map(_._1).sum
+      dang = stats.foldLeft(0.0)(_ + _._2)
+      rounds += 1
+    } while (rounds < PrIters || (changed != 0L && rounds < cap))
+    val scores = spark.createDataFrame(cur.map { case (k, v) => Row(k, v.pr) },
+      StructType(Seq(StructField("node", nodeType), StructField("pr", DoubleType, nullable = false))))
     val signal = spark.range(1)
       .select(lit(rounds).as("rounds"), lit(changed).as("changed_last_round"))
     maybeLogConvergence(tag, signal, spark)
-    (fin.select(col("node"), col("pr")), signal)
-  }
-
-  /** Extra power-iteration rounds past the documented budget, gated on
-    * the 6-decimal quantized round-over-round diff (stop at zero, cap
-    * `cap`): before each extra round both engines count the nodes
-    * whose round(pr, 6) moved between the two previous frontiers and
-    * stop on zero. The gate is computed on the 6-decimal OUTPUT
-    * contract, where the engines' ulp-level float drift is already
-    * absorbed, so the oracle can mirror the stop decision layer by
-    * layer (a CASE on the same count) and stay bit-equal at any corpus
-    * size. The round body is [[powerIteration]]'s. Returns (final
-    * frontier, rounds run in total, changed count at the last round).
-    *
-    * r15 gated-round overhead rework (r14 VERDICT #7, guide §1.2/§2.4;
-    * results bit-identical). The r14 shape paid, PER GATED ROUND, a
-    * separate two-frame join+count for the quant gate (the `qc` below,
-    * kept only for the one boundary check) plus a 1-row
-    * BroadcastExchange build for the dangling mass. Now the caller's
-    * `roundTracked(cur, dang)` (a) carries the previous frontier's pr
-    * on the output as `prev_pr` — the update join reads the
-    * checkpointed `cur` (same node set, same dng/t columns, same
-    * values as the round-invariant frame it replaces) — and (b) takes
-    * the dangling mass as a DRIVER SCALAR folded into the update
-    * expression as a literal (`lit(dang)/lit(n)` constant-folds to the
-    * same IEEE division the broadcast column performed). Each gated
-    * round then costs ONE action: a scan-aggregate over the frame
-    * being materialized anyway, returning both the quant-gate count
-    * (same pairing as the join — prev_pr sits on the same row as pr)
-    * and the NEXT round's dangling sum (same addend set, same
-    * per-partition accumulation order as the filtered aggregate it
-    * replaces — `sum(when(dng, pr))` skips exactly the non-dangling
-    * rows).
-    */
-  private def quantGatedRounds(
-      prev0: DataFrame, cur0: DataFrame,
-      roundTracked: (DataFrame, Double) => DataFrame,
-      cap: Int): (DataFrame, Int, Long) = {
-    def qc(a: DataFrame, b: DataFrame): Long =
-      a.select(col("node"), round(col("pr"), 6).as("qa"))
-        .join(b.select(col("node"), round(col("pr"), 6).as("qb")), Seq("node"))
-        .where(col("qa") =!= col("qb")).count()
-    var cur = cur0
-    var rounds = PrIters
-    var changed = qc(prev0, cur0)
-    if (changed != 0L && rounds < cap) {
-      // dangling mass of the current frontier, fetched once at the gate
-      // boundary; every later round's census returns the next value
-      var dang = cur.where(col("dng"))
-        .agg(coalesce(sum("pr"), lit(0.0))).head().getDouble(0)
-      while (changed != 0L && rounds < cap) {
-        val next = roundTracked(cur, dang).cutLineageLazy
-        val r = next.agg(
-          coalesce(sum(when(
-            round(col("prev_pr"), 6) =!= round(col("pr"), 6), 1L)), lit(0L)),
-          coalesce(sum(when(col("dng"), col("pr"))), lit(0.0))).head()
-        changed = r.getLong(0)
-        dang = r.getDouble(1)
-        cur = next
-        rounds += 1
-      }
-    }
-    (cur, rounds, changed)
+    (scores, signal)
   }
 
   /** [[pagerankScores]] + a GLOBAL dense rank over every node.
@@ -356,20 +302,30 @@ object Graph {
     * Scale shape: the handoff window partitions by (item, day) — key
     * count grows with catalog size × ingestion horizon, per-key size
     * is one item's daily activity (bounded by attention, not corpus) —
-    * then map-side-combines to the edge census. Each kernel iteration
-    * is a keyed shuffle join on the edge frame (NOT broadcast — the
-    * node frame is unbounded). The only global ordering anywhere is
-    * the TakeOrderedAndProject top-N merge; no single-partition sort
-    * of the node frame exists in the plan (PlanSpec-pinned).
+    * then map-side-combines to the edge census. The node state and
+    * its out-edge arrays are built once, hash-partitioned
+    * `spark.sql.shuffle.partitions` wide (NOT broadcast — the node
+    * domain is unbounded); each kernel round is ONE job that shuffles
+    * only the (dst, pr·w) contributions and returns its gate count and
+    * dangling mass as the job's result ([[powerIteration]]). At sf0.01
+    * a traced call runs 16 jobs where the per-round DataFrame plans
+    * ran 77. The only global ordering anywhere is the
+    * TakeOrderedAndProject top-N merge; no single-partition sort of
+    * the node frame exists in the plan (PlanSpec-pinned).
     */
   def g04UserPagerank(spark: SparkSession, dir: String): DataFrame = {
-    pagerankTopN(userNodes(spark, dir), userHandoffCounts(spark, dir), TopUsers)
+    val ev = Tables.events(spark, dir)
+    pagerankTopN(userNodes(ev), userHandoffCounts(ev), TopUsers)
       .select(col("node").as("user_id"), col("pr"), col("rank"))
   }
 
-  /** Every user as a node frame — g04/g05's shared node domain. */
-  private[graft] def userNodes(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir).select(col("user_id").as("node")).distinct()
+  /** Every user of an events frame as a node frame — g04/g05's shared
+    * node domain. Callers load `events` once ([[Tables.events]]) and
+    * pass it here and to [[userHandoffCounts]], so a graph call reads
+    * the table's schema once.
+    */
+  private[graft] def userNodes(events: DataFrame): DataFrame =
+    events.select(col("user_id").as("node")).distinct()
 
   /** The user-handoff edge census (g04's doc): consecutive
     * DIFFERENT-user events per (item = props.k, day) activity stream
@@ -377,8 +333,8 @@ object Graph {
     * vocabulary. Shared by g04 (centrality) and g05 (communities);
     * s31 extracts the SAME transitions at ingestion.
     */
-  private[graft] def userHandoffCounts(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
+  private[graft] def userHandoffCounts(events: DataFrame): DataFrame = {
+    val ev = events
       .select(col("user_id"), col("ts"), col("event_id"),
         get_json_object(col("props"), "$.k").cast("long").as("item"),
         to_date(col("ts")).as("day"))
@@ -417,8 +373,9 @@ object Graph {
     */
   private[graft] def userHandoffLpaInputs(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val sym = symmetrized(userHandoffCounts(spark, dir)).cutLineageLazy
-    (userNodes(spark, dir).cutLineageLazy, sym)
+    val ev = Tables.events(spark, dir)
+    val sym = symmetrized(userHandoffCounts(ev)).cutLineageLazy
+    (userNodes(ev).cutLineageLazy, sym)
   }
 
   /** The undirected weighted edge frame (a, b, w) of an edge census
@@ -682,8 +639,9 @@ object Graph {
     * convergence, round over round.
     */
   def convergenceCensus(spark: SparkSession, dir: String): DataFrame = {
-    val nodes = userNodes(spark, dir).cutLineageLazy
-    val counts = userHandoffCounts(spark, dir).cutLineageLazy
+    val ev = Tables.events(spark, dir)
+    val nodes = userNodes(ev).cutLineageLazy
+    val counts = userHandoffCounts(ev).cutLineageLazy
     val (_, prSig) = pagerankScoresTracked(nodes, counts)
     val (_, pprSig) = pprScoresTracked(nodes, counts, pprSeeds(counts))
     val sym = symmetrized(counts).cutLineageLazy
@@ -721,11 +679,13 @@ object Graph {
     * safe here: the handoff graph has hub users, and unoriented wedge
     * generation at a hub is quadratic in its degree.
     */
-  def g06UserTriangles(spark: SparkSession, dir: String): DataFrame =
+  def g06UserTriangles(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
     triangleCensus(
-      userNodes(spark, dir),
-      undirectedEdges(userHandoffCounts(spark, dir)
+      userNodes(ev),
+      undirectedEdges(userHandoffCounts(ev)
         .select(col("prev_type").as("a"), col("next_type").as("b"))))
+  }
 
   /** g07: connected components on the USER handoff graph — the CC
     * kernel's unbounded-domain proof, completing the family picture
@@ -747,11 +707,12 @@ object Graph {
     * users needs the latter.
     */
   def g07UserComponents(spark: SparkSession, dir: String): DataFrame = {
-    val edges = undirectedEdges(userHandoffCounts(spark, dir)
+    val ev = Tables.events(spark, dir)
+    val edges = undirectedEdges(userHandoffCounts(ev)
         .select(col("prev_type").as("a"), col("next_type").as("b")))
       .select(col("a").as("u"), col("b").as("v"))
     val forest = graft.dedup.Dedup.convergeForest(spark, edges, "g07")
-    userNodes(spark, dir)
+    userNodes(ev)
       .join(forest.select(col("u").as("node"), col("v").as("component")),
         Seq("node"), "left")
       .select(col("node"),
@@ -773,15 +734,18 @@ object Graph {
     * exactly 0.0 rather than the uniform floor. Output: top-
     * [[TopUsers]] by (ppr rounded 6 desc, user_id) with rank.
     *
-    * Scale shape: identical to g04 — the teleport vector is a
-    * nodes-frame column (never a driver map), each iteration is the
-    * same keyed edge join, and the only global ordering is the
-    * TakeOrderedAndProject top-N merge. The seed frame is bounded
-    * ([[PprSeeds]] rows) by construction via its own top-N merge.
+    * Scale shape: identical to g04 — the teleport weight rides on
+    * each node's partitioned state (never a driver map), each round is
+    * the same one-job contribution shuffle, and the only global
+    * ordering is the TakeOrderedAndProject top-N merge. The seed frame
+    * is bounded ([[PprSeeds]] rows) by construction via its own top-N
+    * merge.
     */
-  def g08UserPpr(spark: SparkSession, dir: String): DataFrame =
-    pprFromCounts(userNodes(spark, dir), userHandoffCounts(spark, dir))
+  def g08UserPpr(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
+    pprFromCounts(userNodes(ev), userHandoffCounts(ev))
       .select(col("node").as("user_id"), col("ppr"), col("rank"))
+  }
 
   /** Seed derivation + ranked PPR over a (nodes, handoff-count) pair —
     * shared by g08 (batch census) and s35 (streamed census) so the two
@@ -817,16 +781,17 @@ object Graph {
     * its own cap, [[PprMaxIters]].
     */
   private[graft] def pprScoresTracked(
-      nodesIn: DataFrame, counts: DataFrame,
+      nodes: DataFrame, counts: DataFrame,
       seedsIn: DataFrame): (DataFrame, DataFrame) = {
     val seeds = seedsIn.cutLineageLazy
     val ns: Double = seeds.count().toDouble
-    val tele = nodesIn.cutLineageLazy
+    val tele = nodes
       .join(seeds.withColumn("is_seed", lit(1)), Seq("node"), "left")
       .select(col("node"),
         when(col("is_seed").isNotNull, lit(1.0 / ns)).otherwise(lit(0.0)).as("t"))
-    powerIteration("ppr", tele, counts, col("t"),
-      lit(1.0 - Damping) * col("t"), _ * col("t"), PprMaxIters)
+    powerIteration("ppr", tele, counts, PprMaxIters, uniformStart = false) { _ =>
+      (t, s, dang) => (1.0 - Damping) * t + Damping * (s + dang * t)
+    }
   }
 
   /** g09's core order: nodes must keep ≥ K surviving neighbors. */
@@ -856,11 +821,13 @@ object Graph {
     * frame only shrinks. Lineage cut per round (the durability knob
     * applies).
     */
-  def g09UserKcore(spark: SparkSession, dir: String): DataFrame =
+  def g09UserKcore(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
     kcoreCensus(
-      userNodes(spark, dir),
-      undirectedEdges(userHandoffCounts(spark, dir)
+      userNodes(ev),
+      undirectedEdges(userHandoffCounts(ev)
         .select(col("prev_type").as("a"), col("next_type").as("b"))))
+  }
 
   /** The shared peel kernel over (nodes, undirected edges (a < b)) —
     * g09 feeds it the batch handoff census, s36 the streamed one.
@@ -939,7 +906,7 @@ object Graph {
     * global ordering is the TakeOrderedAndProject top-N merge.
     */
   def g10LinkPrediction(spark: SparkSession, dir: String): DataFrame =
-    linkPrediction(undirectedEdges(userHandoffCounts(spark, dir)
+    linkPrediction(undirectedEdges(userHandoffCounts(Tables.events(spark, dir))
       .select(col("prev_type").as("a"), col("next_type").as("b"))))
 
   /** The shared Jaccard-link kernel over canonical undirected edges —

@@ -316,7 +316,7 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     val wedgePlan = {
       import org.apache.spark.sql.functions._
-      val directed = graft.graph.Graph.userHandoffCounts(spark, sfDir)
+      val directed = graft.graph.Graph.userHandoffCounts(graft.Tables.events(spark, sfDir))
         .select(col("prev_type").as("a"), col("next_type").as("b"))
       val edges = directed
         .unionByName(directed.select(col("b").as("a"), col("a").as("b")))

@@ -162,7 +162,7 @@ class Round14Spec extends SparkSpec {
   // ---------------------------------------------------------------- g05
 
   test("g05: sync-LPA over the user graph matches a driver-side replay") {
-    val directed = graft.graph.Graph.userHandoffCounts(spark, sfDir).collect()
+    val directed = graft.graph.Graph.userHandoffCounts(graft.Tables.events(spark, sfDir)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val sym = directed.flatMap { case (a, b, n) => Seq((a, b, n), (b, a, n)) }
       .filter { case (a, b, _) => a != b }

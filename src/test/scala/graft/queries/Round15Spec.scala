@@ -51,6 +51,17 @@ class Round15Spec extends SparkSpec {
     assert(reliableDirHasData, "no reliable checkpoint files were written")
   }
 
+  test("g04: reliable-checkpoint mode writes the power-iteration rounds and yields identical rows") {
+    def rows() = graft.graph.Graph.g04UserPagerank(spark, sfDir).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
+    val default = rows()
+    val reliable = withReliableCheckpoints(rows())
+    assert(default.nonEmpty && reliable == default,
+      s"modes differ:\nreliable=$reliable\ndefault=$default")
+    // g04 cuts nothing but the kernel's RDD rounds, so the files are theirs
+    assert(reliableDirHasData, "no reliable checkpoint files were written")
+  }
+
   test("e23 descent: reliable-checkpoint mode yields the identical kNN graph") {
     def graph() = graft.sim.Sim.e23KnnGraphRounds(spark, sfDir, 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
@@ -96,7 +107,7 @@ class Round15Spec extends SparkSpec {
   private def g07AgainstUnionFind(dir: String): Unit = {
     import org.apache.spark.sql.functions._
     val edges = graft.graph.Graph.undirectedEdges(
-      graft.graph.Graph.userHandoffCounts(spark, dir)
+      graft.graph.Graph.userHandoffCounts(graft.Tables.events(spark, dir))
         .select(col("prev_type").as("a"), col("next_type").as("b")))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val nodes = graft.Tables.events(spark, dir)
@@ -145,7 +156,7 @@ class Round15Spec extends SparkSpec {
 
   test("g06: orientation bounds the wedge fan-out at hub users") {
     import org.apache.spark.sql.functions._
-    val directed = graft.graph.Graph.userHandoffCounts(spark, sfDir)
+    val directed = graft.graph.Graph.userHandoffCounts(graft.Tables.events(spark, sfDir))
       .select(col("prev_type").as("a"), col("next_type").as("b"))
     val edges = graft.graph.Graph.undirectedEdges(directed)
     val deg = edges.select(col("a").as("node"))

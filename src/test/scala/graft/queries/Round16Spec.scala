@@ -16,8 +16,8 @@ class Round16Spec extends SparkSpec {
   // ------------------------------------------------------ g08 PPR
 
   test("g08 ppr: mass conservation, seed teleport, leaderboard shape") {
-    val counts = graft.graph.Graph.userHandoffCounts(spark, sfDir)
-    val nodes = graft.graph.Graph.userNodes(spark, sfDir)
+    val counts = graft.graph.Graph.userHandoffCounts(graft.Tables.events(spark, sfDir))
+    val nodes = graft.graph.Graph.userNodes(graft.Tables.events(spark, sfDir))
     val seeds = counts.groupBy(col("prev_type").as("node"))
       .agg(sum("n_trans").as("out_n"))
       .orderBy(col("out_n").desc, col("node"))
@@ -90,9 +90,9 @@ class Round16Spec extends SparkSpec {
   // ---------------------------------------------------- g09 k-core
 
   test("g09 kcore: peel reaches a fixpoint within the pinned round budget") {
-    val nodes = graft.graph.Graph.userNodes(spark, sfDir)
+    val nodes = graft.graph.Graph.userNodes(graft.Tables.events(spark, sfDir))
     val edges = graft.graph.Graph.undirectedEdges(
-      graft.graph.Graph.userHandoffCounts(spark, sfDir)
+      graft.graph.Graph.userHandoffCounts(graft.Tables.events(spark, sfDir))
         .select(col("prev_type").as("a"), col("next_type").as("b")))
     def run(r: Int) = graft.graph.Graph.kcoreCensus(nodes, edges, r)
       .collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2)))

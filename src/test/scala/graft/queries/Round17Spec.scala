@@ -138,18 +138,18 @@ class Round17Spec extends SparkSpec {
     * exact construction.
     */
   private def lpaInputs(dir: String) = {
-    val directed = graft.graph.Graph.userHandoffCounts(spark, dir)
+    val directed = graft.graph.Graph.userHandoffCounts(graft.Tables.events(spark, dir))
       .select(col("prev_type").as("a"), col("next_type").as("b"), col("n_trans"))
     val sym = directed
       .unionByName(directed.select(col("b").as("a"), col("a").as("b"), col("n_trans")))
       .where(col("a") =!= col("b"))
       .groupBy("a", "b").agg(sum("n_trans").as("w"))
-    (graft.graph.Graph.userNodes(spark, dir), sym)
+    (graft.graph.Graph.userNodes(graft.Tables.events(spark, dir)), sym)
   }
 
   private def pprSignal(dir: String): org.apache.spark.sql.DataFrame = {
-    val nodes = graft.graph.Graph.userNodes(spark, dir)
-    val counts = graft.graph.Graph.userHandoffCounts(spark, dir)
+    val nodes = graft.graph.Graph.userNodes(graft.Tables.events(spark, dir))
+    val counts = graft.graph.Graph.userHandoffCounts(graft.Tables.events(spark, dir))
     val seeds = counts.groupBy(col("prev_type").as("node"))
       .agg(sum("n_trans").as("out_n"))
       .orderBy(col("out_n").desc, col("node"))
@@ -173,8 +173,8 @@ class Round17Spec extends SparkSpec {
   test("convergence signals: sf0.01 is at fixpoint; sf0.001's 15-node graph is not, and the probe says so") {
     val g = graft.graph.Graph
     val d01 = "/root/testdata/sf0.01"
-    val counts = g.userHandoffCounts(spark, d01)
-    val nodes = g.userNodes(spark, d01)
+    val counts = g.userHandoffCounts(graft.Tables.events(spark, d01))
+    val nodes = g.userNodes(graft.Tables.events(spark, d01))
     assert(changed(g.pagerankScoresTracked(nodes, counts)._2) == 0L,
       "pagerank moved keys in its final round at sf0.01")
     assert(changed(pprSignal(d01)) == 0L,
@@ -192,8 +192,8 @@ class Round17Spec extends SparkSpec {
     // documented budget — the probe's job is to certify that (rounds
     // extended, residual zero), not to report a residual that the
     // kernel is designed to eliminate
-    val cS = g.userHandoffCounts(spark, sfDir)
-    val nS = g.userNodes(spark, sfDir)
+    val cS = g.userHandoffCounts(graft.Tables.events(spark, sfDir))
+    val nS = g.userNodes(graft.Tables.events(spark, sfDir))
     val prSigS = g.pagerankScoresTracked(nS, cS)._2.collect().head
     assert(prSigS.getLong(1) == 0L,
       "gated pagerank left a residual at sf0.001")
@@ -243,8 +243,8 @@ class Round17Spec extends SparkSpec {
       java.nio.file.Paths.get(sf1, "events.parquet")),
       "ScaleUp sf1 replica not present")
     val g = graft.graph.Graph
-    val counts = g.userHandoffCounts(spark, sf1)
-    val nodes = g.userNodes(spark, sf1)
+    val counts = g.userHandoffCounts(graft.Tables.events(spark, sf1))
+    val nodes = g.userNodes(graft.Tables.events(spark, sf1))
     val edges = g.undirectedEdges(counts
       .select(col("prev_type").as("a"), col("next_type").as("b")))
     assert(changed(g.kcoreCensusTracked(nodes, edges)._2) == 0L,
